@@ -65,7 +65,6 @@ object GraftConf {
       // freezing its layout).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.warehouse.dir", s"$localRoot/graft_warehouse")
       .config("spark.ui.enabled", "false")

@@ -155,6 +155,27 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   private def isTable(path: String): Boolean = fs.exists(new Path(abs(path), "_SUCCESS"))
 
+  /** Whether this catalog's writes record partials for stat reads. */
+  private def servesPartials: Boolean = Partials.ServedFormats(format)
+
+  /** Spark's own rule for what a file index reads: `.`/`_` names are
+    * metadata, except `_`-prefixed partition directories such as the
+    * internal `__graft_bucket=<n>`. */
+  private def isDataName(name: String): Boolean =
+    !name.startsWith(".") && (!name.startsWith("_") || name.contains("="))
+
+  /** Table-relative directory of a table-relative file ("" = the root). */
+  private def dirOf(rel: String): String = {
+    val i = rel.lastIndexOf('/')
+    if (i < 0) "" else rel.substring(0, i)
+  }
+
+  /** Listed files grouped by directory: dir → (file name → length). */
+  private def byDir(leaves: Seq[(String, Long)]): Map[String, Map[String, Long]] =
+    leaves.groupBy(l => dirOf(l._1)).map { case (d, fs) =>
+      d -> fs.map { case (rel, len) => rel.substring(rel.lastIndexOf('/') + 1) -> len }.toMap
+    }
+
   /** put — ingest a DataFrame as a partitioned parquet table. The partition
     * column layout gives readPartition/pruned-PMR their pruning for free.
     * A `_graft.json` sidecar records schema + scheme + permissions — the
@@ -165,16 +186,11 @@ class GraftCatalog(spark: SparkSession, root: String,
     // splittability metadata is decided BEFORE the write so the sidecar lands
     // with the data; non-csv formats skip the scan entirely
     val embeddedNl = format == "csv" && hasEmbeddedNewlines(df)
-    var rangeBounds: Option[(Double, Double)] = None
-    scheme match {
-      case Unpartitioned =>
-        capped(df.write).mode("overwrite").format(format).save(target)
-      case HashPartition(c) =>
-        capped(coerceNullKey(df, c).write)
-          .mode("overwrite").partitionBy(c).format(format).save(target)
+    val (frame, partCol, rangeBounds) = scheme match {
+      case Unpartitioned => (df, None, None)
+      case HashPartition(c) => (coerceNullKey(df, c), Some(c), None)
       case BucketedHashPartition(c, n) =>
-        capped(df.withColumn(BucketCol, pmod(hash(col(c)), lit(n))).write)
-          .mode("overwrite").partitionBy(BucketCol).format(format).save(target)
+        (df.withColumn(BucketCol, pmod(hash(col(c)), lit(n))), Some(BucketCol), None)
       case RangePartition(c, n) =>
         // Equi-width bins like the reference's pd.cut: one extra pass for
         // min/max (a metadata-only read when parquet stats suffice), then a
@@ -185,31 +201,45 @@ class GraftCatalog(spark: SparkSession, root: String,
         val (lo, hi) =
           if (bounds.isNullAt(0) || bounds.isNullAt(1)) (0.0, 0.0)
           else (bounds.getDouble(0), bounds.getDouble(1))
-        capped(df.withColumn(BucketCol, rangeBucket(c, lo, hi, n)).write)
-          .mode("overwrite").partitionBy(BucketCol).format(format).save(target)
-        rangeBounds = Some((lo, hi))
+        (df.withColumn(BucketCol, rangeBucket(c, lo, hi, n)), Some(BucketCol), Some((lo, hi)))
     }
+    val observed = Partials.observe(frame, partCol, servesPartials)
+    val w = observed.frame.write
+    capped(partCol.fold(w)(w.partitionBy(_))).mode("overwrite").format(format).save(target)
     // after the data write: overwrite mode clears the directory first
+    val leaves = listLeaves(path)
     writeSidecar(path, toSidecar(df.schema, scheme, rangeBounds, embeddedNl)
-      .copy(versions = Seq(listLeafFiles(path))))
+      .copy(versions = Seq(leaves.map(_._1)),
+        partials = withFiles(observed.collect(), byDir(leaves))))
   }
+
+  /** Attach each observed directory partial to the files that directory
+    * now holds; a listed directory without a partial gets none (and is
+    * then never served). */
+  private def withFiles(observed: Option[Map[String, DirPartial]],
+    files: Map[String, Map[String, Long]]): Map[String, DirPartial] =
+    observed.fold(Map.empty[String, DirPartial]) { dirs =>
+      files.flatMap { case (d, fs) => dirs.get(d).map(p => d -> p.copy(files = fs)) }
+    }
 
   /** All committed data files of a table, as sorted table-relative paths —
     * the snapshot manifest. One recursive namenode listing per WRITE (reads
     * never list); metadata files (`_`/`.` prefixed) are excluded. */
-  private def listLeafFiles(path: String): Seq[String] = {
+  private def listLeafFiles(path: String): Seq[String] = listLeaves(path).map(_._1)
+
+  /** [[listLeafFiles]] with each file's length. */
+  private def listLeaves(path: String): Seq[(String, Long)] = {
     val base = abs(path)
     val baseStr = base.toUri.getPath
     // plain listStatus walk, NOT fs.listFiles(recursive): that variant
     // materializes LocatedFileStatus (per-file block locations), which the
     // checksummed local fs answers with extra per-file I/O — measured ~4x
     // the cost of this walk on a 200-file table, paid on every write
-    def walk(p: Path): Seq[String] =
+    def walk(p: Path): Seq[(String, Long)] =
       fs.listStatus(p).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_") || name.startsWith(".")) Nil
+        if (!isDataName(st.getPath.getName)) Nil
         else if (st.isDirectory) walk(st.getPath)
-        else Seq(st.getPath.toUri.getPath.stripPrefix(baseStr).stripPrefix("/"))
+        else Seq(st.getPath.toUri.getPath.stripPrefix(baseStr).stripPrefix("/") -> st.getLen)
       }
     walk(base).sorted
   }
@@ -276,16 +306,13 @@ class GraftCatalog(spark: SparkSession, root: String,
     // Reproduce the table's physical layout for the new rows — an appended
     // batch written flat into a bucketed table would corrupt partition
     // discovery (leaf files at the root next to bucket directories).
-    val writer = meta.map(_.scheme) match {
-      case Some(SidecarScheme("hash", c, _, _, _)) =>
-        coerceNullKey(aligned, c).write.partitionBy(c)
+    val (frame, partCol) = meta.map(_.scheme) match {
+      case Some(SidecarScheme("hash", c, _, _, _)) => (coerceNullKey(aligned, c), Some(c))
       case Some(SidecarScheme("bucketed_hash", c, n, _, _)) =>
-        aligned.withColumn(BucketCol, pmod(hash(col(c)), lit(n)))
-          .write.partitionBy(BucketCol)
+        (aligned.withColumn(BucketCol, pmod(hash(col(c)), lit(n))), Some(BucketCol))
       case Some(SidecarScheme("range", c, n, lo, hi)) =>
-        aligned.withColumn(BucketCol, rangeBucket(c, lo, hi, n))
-          .write.partitionBy(BucketCol)
-      case _ => aligned.write
+        (aligned.withColumn(BucketCol, rangeBucket(c, lo, hi, n)), Some(BucketCol))
+      case _ => (aligned, None)
     }
     // a so-far-clean csv table is re-checked against THIS batch only: once
     // any batch carries a newline the flag is sticky-true (old files are
@@ -304,29 +331,52 @@ class GraftCatalog(spark: SparkSession, root: String,
     // newline-bearing append therefore leaves the table conservatively
     // dirty (slower whole-file reads, never corrupt ones) — the same
     // degradation an actual crash produces.
-    capped(writer).mode("append").format(format).save(target)
+    // A tracked table's commit delta is exactly the files THIS write added:
+    // the post-write listing minus the pre-write one. Files already on disk
+    // but never committed (a dead writer's residue) stay out of the manifest
+    // and out of every partial, so vacuum still sees them as orphans.
+    val tracked = meta.exists(_.versions.nonEmpty)
+    val before = if (tracked) listLeaves(path) else Nil
+    val observed = Partials.observe(frame, partCol, tracked && servesPartials)
+    val w = observed.frame.write
+    capped(partCol.fold(w)(w.partitionBy(_))).mode("append").format(format).save(target)
     // Sidecar schema := recorded schema ∪ the BATCH's newly declared columns.
     // NOT the merged read schema: that re-types partition columns from
     // directory-name inference (BIGINT → INT), reorders them to the end, and
     // records the internal bucket column as if it were user data.
-    // Snapshot history: append only ADDS files, so this commit's DELTA is
-    // the post-write listing minus everything earlier deltas recorded; older
-    // deltas stay valid untouched. An untracked legacy table (versions
-    // empty) stays untracked — starting history mid-life would fabricate a
-    // v1 that never existed.
+    // Snapshot history: append only ADDS files, so this commit's delta is
+    // appended and older deltas stay valid untouched. An untracked legacy
+    // table (versions empty) stays untracked — starting history mid-life
+    // would fabricate a v1 that never existed.
     meta.foreach { m =>
       val newFields = df.schema.fields.filterNot(f =>
         f.name == BucketCol || m.schema.fieldNames.contains(f.name))
-      val versions =
-        if (m.versions.isEmpty) Nil
-        else {
-          val known = m.versions.flatten.toSet
-          m.versions :+ listLeafFiles(path).filterNot(known)
-        }
+      val added = if (tracked) listLeaves(path).filterNot(before.toSet) else Nil
       writeSidecar(path, m.copy(
         schema = StructType(m.schema.fields ++ newFields),
         embeddedNewlines = m.embeddedNewlines || nlUpgrade,
-        versions = versions))
+        versions = if (tracked) m.versions :+ added.map(_._1) else Nil,
+        partials = if (tracked) appendPartials(m.partials, observed.collect(),
+          byDir(before).keySet, byDir(added)) else Map.empty))
+    }
+  }
+
+  /** Partials after an append: a directory the batch wrote into combines its
+    * old partial with the batch's (rows and files both add); a directory new
+    * to the table takes the batch's. A written directory that existed
+    * without a partial, or whose batch partial is missing, gets none.
+    * Untouched directories keep theirs. */
+  private def appendPartials(old: Map[String, DirPartial],
+    batch: Option[Map[String, DirPartial]], existed: Set[String],
+    added: Map[String, Map[String, Long]]): Map[String, DirPartial] = {
+    val touched = added.keySet ++ batch.fold(Set.empty[String])(_.filter(_._2.rows > 0).keySet)
+    old.filterNot(e => touched(e._1)) ++ touched.flatMap { d =>
+      for {
+        b <- batch.flatMap(_.get(d))
+        files <- added.get(d)
+        fresh = b.copy(files = files)
+        p <- if (existed(d)) old.get(d).map(_ + fresh) else Some(fresh)
+      } yield d -> p
     }
   }
 
@@ -367,26 +417,33 @@ class GraftCatalog(spark: SparkSession, root: String,
     val base = abs(path)
     val tmp = new Path(base.getParent, base.getName + "__merging")
     fs.delete(tmp, true)
-    capped(merged.repartition(col(c)).write.partitionBy(c))
+    val observed = Partials.observe(merged.repartition(col(c)), Some(c), servesPartials)
+    capped(observed.frame.write.partitionBy(c))
       .mode("overwrite").format(format).save(tmp.toString)
     val oldRoot = new Path(base.getParent, base.getName + "__old")
     fs.delete(oldRoot, true)
     fs.mkdirs(oldRoot)
-    fs.listStatus(tmp)
+    val swapped = fs.listStatus(tmp)
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .foreach { d =>
-        val name = d.getPath.getName
-        val dest = new Path(base, name)
-        // park-and-swap; a touched value new to the table has nothing to park
-        if (fs.exists(dest))
-          require(fs.rename(dest, new Path(oldRoot, name)),
-            s"merge: park $name failed")
-        require(fs.rename(d.getPath, dest), s"merge: swap $name failed")
-      }
+    swapped.foreach { d =>
+      val name = d.getPath.getName
+      val dest = new Path(base, name)
+      // park-and-swap; a touched value new to the table has nothing to park
+      if (fs.exists(dest))
+        require(fs.rename(dest, new Path(oldRoot, name)),
+          s"merge: park $name failed")
+      require(fs.rename(d.getPath, dest), s"merge: swap $name failed")
+    }
     fs.delete(oldRoot, true)
     fs.delete(tmp, true)
-    readMeta(path).filter(_.versions.nonEmpty).foreach { m =>
-      writeSidecar(path, m.copy(versions = Seq(listLeafFiles(path))))
+    // each swapped directory holds exactly the observed rows; the untouched
+    // ones keep their partials
+    if (meta.versions.nonEmpty) {
+      val leaves = listLeaves(path)
+      val names = swapped.map(_.getPath.getName).toSet
+      writeSidecar(path, meta.copy(versions = Seq(leaves.map(_._1)),
+        partials = meta.partials.filterNot(e => names(e._1)) ++
+          withFiles(observed.collect(), byDir(leaves).filter(e => names(e._1)))))
     }
   }
 
@@ -424,17 +481,23 @@ class GraftCatalog(spark: SparkSession, root: String,
       else m.versions.flatten.toSet
     val base = abs(path)
     var removed = 0L
-    listLeafFiles(path).filterNot(live).foreach { rel =>
+    val orphans = listLeafFiles(path).filterNot(live)
+    // manifests written before `__graft_bucket=<n>` directories were listed
+    // name none of a bucketed/range table's files: refuse rather than delete
+    // the whole table as orphans
+    def inBucketDir(rel: String) = rel.split('/').exists(_.startsWith("_"))
+    require(!orphans.exists(inBucketDir) || live.exists(inBucketDir),
+      s"vacuum: the manifest of $path lists no bucket-directory file; re-put the table")
+    orphans.foreach { rel =>
       if (fs.delete(new Path(base, rel), false)) removed += 1
     }
     // sweep now-empty data directories bottom-up (a partition dir whose every
     // file was orphaned — e.g. the uncommitted partition of a crashed write);
-    // metadata names (_/. prefixed) are never data and never counted
+    // metadata names are never data and never counted
     def sweepEmpty(p: Path): Boolean = { // returns "p is (now) removable"
       val children = fs.listStatus(p)
       val keep = children.filterNot { st =>
-        st.isDirectory && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") && sweepEmpty(st.getPath)
+        st.isDirectory && isDataName(st.getPath.getName) && sweepEmpty(st.getPath)
       }
       if (keep.isEmpty && p != base) { fs.delete(p, false); removed += 1; true }
       else false
@@ -538,7 +601,9 @@ class GraftCatalog(spark: SparkSession, root: String,
           false, true, conf)
       }
     val m = readMeta(r1).getOrElse(sys.error(s"putReplicated: no sidecar at $r1"))
-    writeSidecar(path, m.copy(replication = 2, versions = Seq(files)))
+    // the partials stay with replica-1's own sidecar; the replicated root is
+    // read through catReplicated's union and never served from partials
+    writeSidecar(path, m.copy(replication = 2, versions = Seq(files), partials = Map.empty))
   }
 
   /** catReplicated — read a replicated table with per-file failover: the
@@ -561,12 +626,8 @@ class GraftCatalog(spark: SparkSession, root: String,
     val manifest = m.versions.flatten
     val roots = ReplicaDirs.map(d => new Path(abs(path), d))
     // manifest-relative parent dir ("" = table root) → one listing each
-    def parentOf(rel: String): String = {
-      val i = rel.lastIndexOf('/')
-      if (i < 0) "" else rel.substring(0, i)
-    }
     def survivors(root: Path, rels: Seq[String]): Set[String] =
-      rels.map(parentOf).distinct.iterator.flatMap { d =>
+      rels.map(dirOf).distinct.iterator.flatMap { d =>
         val dir = if (d.isEmpty) root else new Path(root, d)
         val listed =
           try fs.listStatus(dir).toSeq
@@ -648,10 +709,16 @@ class GraftCatalog(spark: SparkSession, root: String,
     * v1.
     * `replication` > 1 marks a table written by [[putReplicated]]: the data
     * lives under `replica-1/` and `replica-2/` subtrees and `versions` holds
-    * the REPLICA-RELATIVE manifest both copies share. */
+    * the REPLICA-RELATIVE manifest both copies share.
+    * `partials` holds, per partition directory (table-relative, "" for an
+    * unpartitioned table), the write-time [[DirPartial]] of its committed
+    * files: every write that commits rows records them in the same sidecar
+    * commit, and `Pmr`'s stats are answered from them when the listing a
+    * read holds still matches. */
   private case class Sidecar(schema: StructType, scheme: SidecarScheme,
     permission: String, format: String, embeddedNewlines: Boolean = true,
-    versions: Seq[Seq[String]] = Nil, replication: Int = 1)
+    versions: Seq[Seq[String]] = Nil, replication: Int = 1,
+    partials: Map[String, DirPartial] = Map.empty)
 
   /** Does any string column of the batch carry an embedded newline? One cheap
     * early-out scan (stops at the first hit) paid only on csv writes — the
@@ -674,7 +741,7 @@ class GraftCatalog(spark: SparkSession, root: String,
   // Jackson (on Spark's classpath) — a real (de)serializer, not string
   // surgery: a partition column literally named "scheme", or names with
   // quotes/backslashes, must round-trip.
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def mapper = Partials.mapper
 
   private def renderSidecar(m: Sidecar): String = {
     val root = mapper.createObjectNode()
@@ -691,6 +758,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     root.put("permission", m.permission)
     root.put("format", m.format)
     if (m.format == "csv") root.put("embedded_newlines", m.embeddedNewlines)
+    if (m.partials.nonEmpty) Partials.renderDirs(root.putObject("partials"), m.partials)
     if (m.versions.nonEmpty) {
       val va = root.putArray("versions")
       m.versions.foreach { files =>
@@ -739,7 +807,8 @@ class GraftCatalog(spark: SparkSession, root: String,
         v.elements().asScala.map(arr =>
           arr.elements().asScala.map(_.asText).toSeq).toSeq
       }.getOrElse(Nil),
-      optNode(top, "replication").map(_.asInt).getOrElse(1))
+      optNode(top, "replication").map(_.asInt).getOrElse(1),
+      optNode(top, "partials").map(Partials.parseDirs).getOrElse(Map.empty))
   }
 
   /** Refuse layout-dependent writes when the recorded scheme is incoherent —
@@ -928,14 +997,13 @@ class GraftCatalog(spark: SparkSession, root: String,
     * when the main one is missing — the only way that happens is a crash
     * between writeSidecar's delete and rename, and the temp is complete. */
   private def readMetaRaw(path: String): Option[String] = {
-    val main = new Path(abs(path), MetaFile)
-    val p = if (fs.exists(main)) main else new Path(abs(path), MetaTmp)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
-      finally in.close()
-    }
+    def read(name: String): Option[String] =
+      try {
+        val in = fs.open(new Path(abs(path), name))
+        try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    read(MetaFile).orElse(read(MetaTmp))
   }
 
   /** The physical partition column of a table, from its sidecar: the user's
@@ -965,7 +1033,10 @@ class GraftCatalog(spark: SparkSession, root: String,
     val base = abs(path)
     def dataFiles(p: Path) = fs.listStatus(p).filter(f => f.isFile &&
       !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    physicalPartitionColumn(path) match {
+    def named(files: Seq[org.apache.hadoop.fs.FileStatus]) =
+      files.map(f => f.getPath.getName -> f.getLen).toMap
+    // directory → its data files before the rewrite
+    val rewritten: Map[String, Map[String, Long]] = physicalPartitionColumn(path) match {
       case Some(c) =>
         // Compaction cost scales with FRAGMENTATION, not table size: only
         // directories holding 2+ data files are read, rewritten and swapped;
@@ -974,15 +1045,16 @@ class GraftCatalog(spark: SparkSession, root: String,
         // "minimal ceil(rows/cap) files" from fragmentation without row
         // counts, so its multi-file dirs are rewritten each run — the cap
         // bounds that work.
-        val frag = fs.listStatus(base)
+        val frag = fs.listStatus(base).toSeq
           .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .filter(st => dataFiles(st.getPath).length > 1)
+          .map(st => st -> dataFiles(st.getPath).toSeq)
+          .filter(_._2.length > 1)
         if (frag.isEmpty) return // nothing fragmented: metadata-only no-op
         val tmp = new Path(base.getParent, base.getName + "__compacting")
         fs.delete(tmp, true)
         // one task per partition value → one file per directory, unless the
         // leaf-file cap splits an oversized value into ceil(rows/cap) files
-        capped(loadData(path, Some(frag.map(_.getPath).toSeq))
+        capped(loadData(path, Some(frag.map(_._1.getPath)))
             .repartition(col(c)).write.partitionBy(c))
           .mode("overwrite").format(format).save(tmp.toString)
         // swap per fragmented directory (park outside the table root — a
@@ -993,7 +1065,7 @@ class GraftCatalog(spark: SparkSession, root: String,
         val oldRoot = new Path(base.getParent, base.getName + "__old")
         fs.delete(oldRoot, true)
         fs.mkdirs(oldRoot)
-        frag.foreach { d =>
+        frag.foreach { case (d, _) =>
           val name = d.getPath.getName
           val fresh = new Path(tmp, name)
           require(fs.exists(fresh), s"compact: rewrite missing partition $name")
@@ -1003,8 +1075,10 @@ class GraftCatalog(spark: SparkSession, root: String,
         }
         fs.delete(oldRoot, true)
         fs.delete(tmp, true)
+        frag.map { case (d, files) => d.getPath.getName -> named(files) }.toMap
       case None =>
-        if (dataFiles(base).length <= 1) return // already a single file
+        val files = dataFiles(base).toSeq
+        if (files.length <= 1) return // already a single file
         val meta = readMetaRaw(path)
         val tmp = new Path(base.getParent, base.getName + "__compacting")
         fs.delete(tmp, true)
@@ -1020,14 +1094,27 @@ class GraftCatalog(spark: SparkSession, root: String,
         require(fs.rename(base, old), s"compact: park $base -> $old failed")
         require(fs.rename(tmp, base), s"compact: swap $tmp -> $base failed")
         fs.delete(old, true)
+        Map("" -> named(files))
     }
     // compact REWRITES files, so every pre-compact manifest now names paths
     // that no longer exist: truncate history to the single current snapshot
     // (production lakehouses either rewrite old manifests or GC snapshots on
     // rewrite — truncation is the honest minimal form). Tables that early-
     // returned above changed nothing and keep their full history.
+    // A rewritten directory holds the same rows, so its partial stays and
+    // only its file list is refreshed — unless the directory held files its
+    // partial never covered (residue), whose rows are now folded in.
     readMeta(path).filter(_.versions.nonEmpty).foreach { m =>
-      writeSidecar(path, m.copy(versions = Seq(listLeafFiles(path))))
+      val leaves = listLeaves(path)
+      val now = byDir(leaves)
+      writeSidecar(path, m.copy(versions = Seq(leaves.map(_._1)),
+        partials = m.partials.flatMap { case (d, p) =>
+          rewritten.get(d) match {
+            case None => Some(d -> p)
+            case Some(pre) if pre == p.files => now.get(d).map(f => d -> p.copy(files = f))
+            case _ => None
+          }
+        }))
     }
   }
 
@@ -1048,5 +1135,78 @@ class GraftCatalog(spark: SparkSession, root: String,
       StructField("partition", StringType), StructField("num_files", IntegerType),
       StructField("total_bytes", LongType)))
     spark.createDataFrame(spark.sparkContext.parallelize(parts, 1), schema)
+  }
+}
+
+object GraftCatalog {
+  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, AttributeSet,
+    Expression, SubqueryExpression}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex,
+    LogicalRelation}
+  import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+
+  /** The write-time partial of `column` over exactly the rows `df` yields,
+    * with their row count — or None unless that is provable from metadata
+    * alone. Provable means: `df` is a plain parquet/orc scan of a catalog
+    * table root (`cat`, `readPartition`), under nothing but attribute-only
+    * projections and filters on partition columns; the column is a
+    * primitive numeric data column; and for every directory the scan would
+    * read, the sidecar records a partial whose file list (name, length)
+    * equals the listing the scan holds. The directories are pruned by the
+    * relation's own file index, in memory, exactly as the scan would prune
+    * them. Crash residue, a rewritten file, a replicated table, a snapshot
+    * read (`readVersion`) or a foreign table all yield None. */
+  def partialOf(df: DataFrame, column: String): Option[(Long, ColPartial)] = {
+    def scan(p: LogicalPlan, filters: Seq[Expression])
+      : Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = p match {
+      case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) =>
+        scan(child, filters)
+      case Filter(cond, child) => scan(child, cond +: filters)
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => Some((l, h, filters))
+        case _ => None
+      }
+      case _ => None
+    }
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    for {
+      target <- plan.resolveQuoted(column, spark.sessionState.analyzer.resolver)
+      (rel, fsRel, filters) <- scan(plan, Nil)
+      root <- fsRel.location match {
+        case i: InMemoryFileIndex if i.rootPaths.size == 1 && fsRel.bucketSpec.isEmpty =>
+          Some(i.rootPaths.head)
+        case _ => None
+      }
+      fmt <- fsRel.fileFormat match {
+        case _: ParquetFileFormat => Some("parquet")
+        case _: OrcFileFormat => Some("orc")
+        case _ => None
+      }
+      partAttrs = AttributeSet(
+        rel.output.filter(a => fsRel.partitionSchema.fieldNames.contains(a.name)))
+      attr <- rel.output.find(_.exprId == target.exprId)
+      if !partAttrs.contains(attr) && Partials.isPrimitive(attr.dataType)
+      if filters.forall(f => f.deterministic && !SubqueryExpression.hasSubquery(f) &&
+        f.references.subsetOf(partAttrs))
+      // a one-file snapshot read is rooted at that file: no sidecar below it
+      m <- scala.util.Try(new GraftCatalog(spark, root.toString, fmt).readMeta("")).toOption.flatten
+      if m.replication == 1 && m.format == fmt
+      served <- {
+        val rootPath = root.toUri.getPath
+        val listed = fsRel.location.listFiles(filters, Nil).flatMap(_.files)
+          .groupBy(f => f.getPath.getParent.toUri.getPath.stripPrefix(rootPath).stripPrefix("/"))
+          .map { case (d, fs) => d -> fs.map(f => f.getPath.getName -> f.getLen).toMap }
+        // the index drops zero-length files; they hold no rows
+        val dirs = listed.toSeq.map { case (d, files) =>
+          m.partials.get(d).filter(_.files.filter(_._2 > 0) == files) }
+        val cols = dirs.map(_.flatMap(_.cols.get(attr.name).filter(_.dataType == attr.dataType)))
+        if (!cols.forall(_.isDefined)) None
+        else Some((dirs.flatten.map(_.rows).sum, cols.flatten.reduceOption(_ + _)
+          .getOrElse(ColPartial(attr.dataType, 0, 0, None, None, Some(java.math.BigDecimal.ZERO)))))
+      }
+    } yield served
   }
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.edfs.{GraftCatalog, HashPartition, RangePartition}
+import graft.edfs.{ColPartial, GraftCatalog, HashPartition, RangePartition}
 
 /** Partition-based Map-Reduce (PMR) analytics + the EDFS storage queries —
   * SURVEY §2A. Mirrors the reference's getAvg/getMin/getMax
@@ -12,10 +12,19 @@ import graft.edfs.{GraftCatalog, HashPartition, RangePartition}
   * pruning (:579), its debug explain (:713), and the named domain wrappers
   * (fs_commands.py:396,:429; proj-firebase-flask.py:637,:671).
   *
-  * Spark-first: the reference's map (per-partition partial) + reduce (weighted
-  * combine) IS Spark's partial-aggregation + shuffle-merge; we just declare the
-  * aggregate. The `hash=` pruning becomes a filter on the partition column,
-  * which Catalyst turns into directory-level partition pruning.
+  * The reference maps each partition to a partial and reduces the partials
+  * on the driver. Here the map runs at WRITE time: every GraftCatalog write
+  * that commits rows records, per partition directory, the partial of each
+  * primitive numeric column (row/non-null/NaN counts, min/max, exact
+  * `decimal(12,2)` sum) in the table's sidecar, computed inside the write
+  * job itself. `statMin`/`statMax`/`statAvg` over a plain `cat` or
+  * `readPartition` — the `hash=` pruning is a filter on the partition column
+  * — then only reduce: the relation's own file index prunes the
+  * directories, every selected directory's listed files must equal the ones
+  * its partial covers, and the answer is a one-row local relation that
+  * launches no job. Any other input, or any mismatch (crash residue, a
+  * foreign table, a snapshot read, a value the decimal cast refuses), falls
+  * back to the same statistic declared as one Spark aggregate.
   */
 object Pmr {
 
@@ -324,32 +333,103 @@ object Pmr {
     ((sum(dec2(clean)).cast("double") / count(clean)), count(clean))
   }
 
-  /** min over `c` (n = non-null count). referenceNan: NaN→+inf pre-fill. */
-  def statMin(df: DataFrame, c: String, referenceNan: Boolean = false): DataFrame = {
-    val v = col(c)
-    df.agg((if (referenceNan) refMinExpr(v) else min(v)).as("min_val"),
-      count(v).as("n"))
+  /** The three reductions, each as the scan aggregate and as the reduce of
+    * a write-time partial (`rows` rows, column partial `p`). The reduce
+    * mirrors the aggregate's semantics exactly and returns None where the
+    * aggregate's answer cannot be derived (it would fail, or needs a sum the
+    * partial could not keep) — the caller then runs the aggregate. */
+  private[graft] sealed abstract class Stat {
+    def scan(v: Column, referenceNan: Boolean): Seq[Column]
+    def reduce(rows: Long, p: ColPartial, referenceNan: Boolean): Option[(Any, Long)]
   }
 
-  /** max over `c`. referenceNan: NaN→0 pre-fill (the reference's rule). */
-  def statMax(df: DataFrame, c: String, referenceNan: Boolean = false): DataFrame = {
-    val v = col(c)
-    df.agg((if (referenceNan) refMaxExpr(v) else max(v)).as("max_val"),
-      count(v).as("n"))
+  private[graft] case object Min extends Stat {
+    def scan(v: Column, referenceNan: Boolean): Seq[Column] =
+      Seq((if (referenceNan) refMinExpr(v) else min(v)).as("min_val"), count(v).as("n"))
+    def reduce(rows: Long, p: ColPartial, referenceNan: Boolean): Option[(Any, Long)] =
+      Some((
+        if (referenceNan) {
+          // every null/NaN row fills to +inf, which no real value exceeds
+          if (rows == 0) null else p.lo.map(asDouble).getOrElse(Double.PositiveInfinity)
+        } else if (p.nonNull == 0) null
+        else p.lo.getOrElse(nanOf(p)), // NaN sorts above every value
+        p.nonNull))
   }
+
+  private[graft] case object Max extends Stat {
+    def scan(v: Column, referenceNan: Boolean): Seq[Column] =
+      Seq((if (referenceNan) refMaxExpr(v) else max(v)).as("max_val"), count(v).as("n"))
+    def reduce(rows: Long, p: ColPartial, referenceNan: Boolean): Option[(Any, Long)] =
+      Some((
+        if (referenceNan) {
+          if (rows == 0) null
+          else {
+            val filled = rows > p.nonNull - p.nan // some null/NaN row fills to 0
+            p.hi.map(asDouble) match {
+              case Some(h) if !(filled && h < 0.0) => h
+              case _ => 0.0
+            }
+          }
+        } else if (p.nonNull == 0) null
+        else if (p.nan > 0) nanOf(p)
+        else p.hi.orNull,
+        p.nonNull))
+  }
+
+  private[graft] case object Avg extends Stat {
+    def scan(v: Column, referenceNan: Boolean): Seq[Column] =
+      if (referenceNan) {
+        val (avg, n) = refAvgExprs(v)
+        Seq(avg.as("avg_val"), n.as("n"))
+      } else
+        Seq((sum(dec2(v)).cast("double") / count(v)).as("avg_val"), count(v).as("n"))
+    def reduce(rows: Long, p: ColPartial, referenceNan: Boolean): Option[(Any, Long)] = {
+      // default mode casts every non-null value: a NaN fails the ANSI cast
+      val n = if (referenceNan) p.nonNull - p.nan else p.nonNull
+      p.sum.filter(_ => referenceNan || p.nan == 0).map { s =>
+        (if (n == 0) null else s.doubleValue / n.toDouble, n)
+      }
+    }
+  }
+
+  private def asDouble(v: Any): Double = v.asInstanceOf[Number].doubleValue
+  private def nanOf(p: ColPartial): Any =
+    if (p.dataType == org.apache.spark.sql.types.FloatType) Float.NaN else Double.NaN
+
+  /** The statistic as one Spark aggregate over `df` — the path every input
+    * that cannot be served from write-time partials takes. */
+  private[graft] def scanStat(df: DataFrame, c: String, stat: Stat,
+    referenceNan: Boolean): DataFrame = {
+    val cols = stat.scan(col(c), referenceNan)
+    df.agg(cols.head, cols.tail: _*)
+  }
+
+  /** The statistic over `df`, reduced on the driver from the write-time
+    * partials when [[GraftCatalog.partialOf]] can prove they cover exactly
+    * `df`'s rows; the result then has the aggregate's exact schema and
+    * launches no job. Otherwise the aggregate itself. */
+  private def stat(df: DataFrame, c: String, stat: Stat, referenceNan: Boolean): DataFrame = {
+    val scan = scanStat(df, c, stat, referenceNan)
+    GraftCatalog.partialOf(df, c)
+      .flatMap { case (rows, p) => stat.reduce(rows, p, referenceNan) }
+      .map { case (v, n) =>
+        df.sparkSession.createDataFrame(java.util.List.of(Row(v, n)), scan.schema) }
+      .getOrElse(scan)
+  }
+
+  /** min over `c` (n = non-null count). referenceNan: NaN→+inf pre-fill. */
+  def statMin(df: DataFrame, c: String, referenceNan: Boolean = false): DataFrame =
+    stat(df, c, Min, referenceNan)
+
+  /** max over `c`. referenceNan: NaN→0 pre-fill (the reference's rule). */
+  def statMax(df: DataFrame, c: String, referenceNan: Boolean = false): DataFrame =
+    stat(df, c, Max, referenceNan)
 
   /** mean over `c`. Default: decimal-exact (oracle-reproducible). referenceNan:
     * pandas-style NaN skip, which subsumes "exclude all-NaN partitions" — an
     * all-NaN partition contributes a zero-count partial to the merge. */
-  def statAvg(df: DataFrame, c: String, referenceNan: Boolean = false): DataFrame = {
-    val v = col(c)
-    if (referenceNan) {
-      val (avg, n) = refAvgExprs(v)
-      df.agg(avg.as("avg_val"), n.as("n"))
-    } else
-      df.agg((sum(dec2(v)).cast("double") / count(v)).as("avg_val"),
-        count(v).as("n"))
-  }
+  def statAvg(df: DataFrame, c: String, referenceNan: Boolean = false): DataFrame =
+    stat(df, c, Avg, referenceNan)
 
   /** A7 — getAvg: decimal-exact distributed mean of a numeric column. */
   def pmrAvg(spark: SparkSession, sfDir: String): DataFrame = {
@@ -384,9 +464,7 @@ object Pmr {
     * one directory before any data is read. */
   def pmrAvgPruned(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = ensureCustomerByNation(spark, sfDir)
-    cat.readPartition("warehouse/customer_by_nation", "c_nationkey", 7)
-      .agg((sum(dec2(col("c_acctbal"))).cast("double") / count(col("c_acctbal")))
-        .as("avg_val"), count(col("c_acctbal")).as("n"))
+    statAvg(cat.readPartition("warehouse/customer_by_nation", "c_nationkey", 7), "c_acctbal")
   }
 
   val pmrAvgPrunedSql: String =
@@ -416,10 +494,8 @@ object Pmr {
     * a fixed column, here over the range-partitioned orders table. */
   def pmrNamedStat(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = ensureOrdersByPriceRange(spark, sfDir)
-    cat.cat("warehouse/orders_by_price")
-      .agg(lit("avg_order_totalprice").as("stat"),
-        (sum(dec2(col("o_totalprice"))).cast("double") / count(col("o_totalprice")))
-          .as("value"))
+    statAvg(cat.cat("warehouse/orders_by_price"), "o_totalprice")
+      .select(lit("avg_order_totalprice").as("stat"), col("avg_val").as("value"))
   }
 
   val pmrNamedStatSql: String =

@@ -537,4 +537,57 @@ class CatalogSpec extends SparkSpec {
     cat.put(src, "plain", HashPartition("n_regionkey"))
     intercept[IllegalArgumentException](cat.catReplicated("plain"))
   }
+
+  test("PMR stats serve from partials, fall back on residue, and serve again after vacuum") {
+    import graft.operators.Pmr
+    val cat = freshCatalog("partials_residue")
+    val src = Tables.load(spark, sfDir, "nation")
+    cat.put(src.filter(col("n_nationkey") < 10), "t", HashPartition("n_regionkey"))
+    cat.append(src.filter(col("n_nationkey") >= 10), "t")
+    // the pre-partials answer: the decimal-exact mean as one aggregate over
+    // whatever the directory read returns
+    def dirRead(df: org.apache.spark.sql.DataFrame) = df.agg(
+      (sum(col("n_nationkey").cast("decimal(12,2)")).cast("double") /
+        count(col("n_nationkey"))).as("avg_val"), count(col("n_nationkey")).as("n")).head()
+    val clean = Pmr.statAvg(cat.cat("t"), "n_nationkey")
+    assert(served(clean))
+    val cleanRow = clean.head()
+    assert(cleanRow == dirRead(cat.cat("t")) && cleanRow.getLong(1) == src.count())
+    cat.plantCrashResidue("t")
+    val dirty = Pmr.statAvg(cat.cat("t"), "n_nationkey")
+    assert(!served(dirty), "residue must force the aggregate")
+    val dirtyRow = dirty.head()
+    assert(dirtyRow == dirRead(cat.cat("t")) && dirtyRow.getLong(1) > src.count(),
+      s"orphan rows must count as the directory read counts them: $dirtyRow")
+    cat.vacuum("t")
+    val again = Pmr.statAvg(cat.cat("t"), "n_nationkey")
+    assert(served(again) && again.head() == cleanRow)
+  }
+
+  test("PMR stats fall back on a corrupted sidecar, a snapshot read and a replicated table") {
+    import graft.operators.Pmr
+    val cat = freshCatalog("partials_fallback")
+    val src = Tables.load(spark, sfDir, "nation")
+    cat.put(src.filter(col("n_nationkey") < 10), "t", HashPartition("n_regionkey"))
+    cat.append(src.filter(col("n_nationkey") >= 10), "t")
+    assert(served(Pmr.statMax(cat.cat("t"), "n_nationkey")))
+    // an older snapshot is a file list, not the table root
+    val v1 = Pmr.statMax(cat.readVersion("t", 1), "n_nationkey")
+    assert(!served(v1) && v1.head().getInt(0) == 9)
+    val want = Pmr.statMax(cat.cat("t"), "n_nationkey").head()
+    val hp = new org.apache.hadoop.fs.Path(
+      s"${GraftConf.localRoot}/test_edfs/partials_fallback/t/_graft.json")
+    val hfs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val w = hfs.create(hp, true)
+    try w.write("""{"permission": "644"}""".getBytes("UTF-8")) finally w.close()
+    val corrupt = Pmr.statMax(cat.cat("t"), "n_nationkey")
+    assert(!served(corrupt) && corrupt.head() == want)
+    cat.putReplicated(src, "r", HashPartition("n_regionkey"))
+    val rep = Pmr.statMax(cat.catReplicated("r"), "n_nationkey")
+    assert(!served(rep) && rep.head() == want)
+  }
+
+  private def served(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 }
