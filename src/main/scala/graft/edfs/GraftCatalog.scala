@@ -224,7 +224,7 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   /** All committed data files of a table, as sorted table-relative paths —
     * the snapshot manifest. One recursive namenode listing per WRITE (reads
-    * never list); metadata files (`_`/`.` prefixed) are excluded. */
+    * never list); metadata names are excluded by [[isDataName]]. */
   private def listLeafFiles(path: String): Seq[String] = listLeaves(path).map(_._1)
 
   /** [[listLeafFiles]] with each file's length. */
