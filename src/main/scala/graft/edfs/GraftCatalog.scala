@@ -449,6 +449,17 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   // ----- A22: vacuum + snapshot expiration (lakehouse maintenance) -----
 
+  /** Manifests written before `__graft_bucket=<n>` directories were listed
+    * name none of a bucketed/range table's files. Such a manifest must not
+    * define liveness (vacuum) or a snapshot (readVersion): refuse when it
+    * lists no bucket-directory file while the table holds some. */
+  private def requireBucketFilesListed(op: String, path: String, live: Set[String],
+    onDisk: => Seq[String]): Unit = {
+    def inBucketDir(rel: String) = rel.split('/').exists(_.startsWith("_"))
+    require(live.exists(inBucketDir) || !onDisk.exists(inBucketDir),
+      s"$op: the manifest of $path lists no bucket-directory file; re-put the table")
+  }
+
   /** vacuum — delete everything in and around the table that no snapshot
     * references: leaf files absent from the manifest union (residue of a
     * write that died after task commit but before its delta was recorded),
@@ -481,13 +492,10 @@ class GraftCatalog(spark: SparkSession, root: String,
       else m.versions.flatten.toSet
     val base = abs(path)
     var removed = 0L
-    val orphans = listLeafFiles(path).filterNot(live)
-    // manifests written before `__graft_bucket=<n>` directories were listed
-    // name none of a bucketed/range table's files: refuse rather than delete
-    // the whole table as orphans
-    def inBucketDir(rel: String) = rel.split('/').exists(_.startsWith("_"))
-    require(!orphans.exists(inBucketDir) || live.exists(inBucketDir),
-      s"vacuum: the manifest of $path lists no bucket-directory file; re-put the table")
+    val onDisk = listLeafFiles(path)
+    // refuse rather than delete the whole table as orphans
+    requireBucketFilesListed("vacuum", path, live, onDisk)
+    val orphans = onDisk.filterNot(live)
     orphans.foreach { rel =>
       if (fs.delete(new Path(base, rel), false)) removed += 1
     }
@@ -979,6 +987,7 @@ class GraftCatalog(spark: SparkSession, root: String,
       s"time travel: $path has no snapshot history (written by a pre-snapshot writer?)")
     require(v >= 1 && v <= m.versions.length,
       s"time travel: version $v out of range 1..${m.versions.length} at $path")
+    requireBucketFilesListed("time travel", path, m.versions.flatten.toSet, listLeafFiles(path))
     val files = m.versions.take(v).flatten.map(rel => new Path(abs(path), rel))
     // loud, diagnosable failure over a runtime FileNotFound mid-scan: a
     // dangling manifest means some physical delete bypassed the truncation

@@ -1282,30 +1282,69 @@ object Similarity {
        | WHERE vec_id % 10 <> 9 AND vec_id < ${ivfKSql(
            "SELECT COUNT(*) FROM e WHERE vec_id % 10 <> 9")})""".stripMargin
 
-  // dir -> (embeddings fingerprint, (full count, corpus-slice count)): the
-  // K policy needs N before anything trains, adopts or dumps an oracle —
-  // memoized per fingerprint like the codebooks (a parquet count is
-  // metadata-cheap but sits on every fingerprint-check path)
-  private val embCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, (Long, Long))]
+  // dir -> (embeddings fingerprint, count): the K policy needs N before
+  // anything trains, adopts or dumps an oracle — memoized per fingerprint
+  // like the codebooks, since a count sits on every fingerprint-check path.
+  // The full-table count comes from parquet footers (no job); the
+  // corpus-slice count is a filtered count, run only for the corpus codebook.
+  private type CountMemo = scala.collection.concurrent.TrieMap[String, (String, Long)]
+  private val embCountCache: CountMemo = scala.collection.concurrent.TrieMap.empty
+  private val corpusCountCache: CountMemo = scala.collection.concurrent.TrieMap.empty
 
-  private def embCounts(spark: SparkSession, sfDir: String): (Long, Long) = {
+  private def memoCount(cache: CountMemo, sfDir: String)(count: => Long): Long = {
     val fp = graft.Tables.fingerprint(sfDir, "embeddings")
-    embCountCache.get(sfDir).filter(_._1 == fp).map(_._2).getOrElse {
+    cache.get(sfDir).filter(_._1 == fp).map(_._2).getOrElse {
+      val n = count
+      cache(sfDir) = (fp, n)
+      n
+    }
+  }
+
+  /** Rows of the full embeddings table: [[footerRows]], so a fresh session
+    * learns the K tag from metadata, with `count()` for a source that is no
+    * plain parquet scan. */
+  private def embCount(spark: SparkSession, sfDir: String): Long =
+    memoCount(embCountCache, sfDir) {
       val e = Tables.load(spark, sfDir, "embeddings")
-      val n = e.count()
-      val nCorpus = e.filter(col("vec_id") % 10 =!= 9).count()
-      embCountCache(sfDir) = (fp, (n, nCorpus))
-      (n, nCorpus)
+      footerRows(e).getOrElse(e.count())
+    }
+
+  /** Rows of the corpus slice (vec_id % 10 <> 9) the corpus codebook trains on. */
+  private def corpusCount(spark: SparkSession, sfDir: String): Long =
+    memoCount(corpusCountCache, sfDir) {
+      Tables.load(spark, sfDir, "embeddings").filter(col("vec_id") % 10 =!= 9).count()
+    }
+
+  /** Row count of a plain parquet scan, summed on the driver from the
+    * footers of the files the relation's own file index lists (the listing
+    * the scan would read: no `_SUCCESS`, `.crc` or zero-length file). None
+    * when `df` is anything but an unfiltered parquet relation. */
+  private[graft] def footerRows(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import scala.jdk.CollectionConverters._
+    val relation = df.queryExecution.analyzed match {
+      case l: LogicalRelation => Some(l.relation)
+      case _ => None
+    }
+    relation.collect {
+      case fsRel: HadoopFsRelation if fsRel.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        val conf = df.sparkSession.sessionState.newHadoopConf()
+        fsRel.location.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+          org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f.fileStatus, conf),
+            org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+            .getBlocks.asScala.map(_.getRowCount).sum
+        }.sum
     }
   }
 
   /** The trained K for this dir's FULL-table codebook / CORPUS-slice
     * codebook under the live policy + budget. */
   private[graft] def ivfKFor(spark: SparkSession, sfDir: String): Int =
-    ivfK(embCounts(spark, sfDir)._1)
+    ivfK(embCount(spark, sfDir))
   private def corpusIvfKFor(spark: SparkSession, sfDir: String): Int =
-    ivfK(embCounts(spark, sfDir)._2)
+    ivfK(corpusCount(spark, sfDir))
 
   /** Fingerprint TAG for every store whose CONTENT depends on the coarse
     * codebook (path index, cid-bucketed tables, graph stores): the source
@@ -1330,13 +1369,13 @@ object Similarity {
     * `-Dgraft.ivf.k.budget` change can never serve an old-K codebook
     * against stores and model blobs rebuilt under the new tag. */
   private def cachedIvfTag(sfDir: String): Option[String] =
-    embCountCache.get(sfDir)
-      .filter(_._1 == graft.Tables.fingerprint(sfDir, "embeddings"))
-      .map { case (fp, (n, _)) => fp + ":ivfk" + ivfK(n) + trainPolicyTag }
+    cachedTag(embCountCache, sfDir)
   private def cachedCorpusIvfTag(sfDir: String): Option[String] =
-    embCountCache.get(sfDir)
+    cachedTag(corpusCountCache, sfDir)
+  private def cachedTag(cache: CountMemo, sfDir: String): Option[String] =
+    cache.get(sfDir)
       .filter(_._1 == graft.Tables.fingerprint(sfDir, "embeddings"))
-      .map { case (fp, (_, nc)) => fp + ":ivfk" + ivfK(nc) + trainPolicyTag }
+      .map { case (fp, n) => fp + ":ivfk" + ivfK(n) + trainPolicyTag }
 
   // ----- trained-model persistence (StoreFp model blobs, r14 dir. #2) -----
 
@@ -1384,6 +1423,7 @@ object Similarity {
     codebookCache.clear()
     semanticCodebookCache.clear()
     embCountCache.clear()
+    corpusCountCache.clear()
     knnQCountCache.clear()
     ivfIndexBuilt.clear()
     ivfBucketedBuilt.clear()
@@ -1475,7 +1515,7 @@ object Similarity {
         "ivf_codebook" + dirSlug(sfDir), tag) {
         cbToLines(lloyd(spark, Tables.load(spark, sfDir, "embeddings")
           .select(col("vec_id"), asDouble(col("embedding")).as("v")),
-          ivfKFor(spark, sfDir)))
+          ivfKFor(spark, sfDir), embCount(spark, sfDir)))
       })
       codebookCache(sfDir) = (tag, codebook)
       codebook
@@ -1531,10 +1571,10 @@ object Similarity {
       .setScale(12, java.math.RoundingMode.HALF_EVEN).doubleValue()
 
   private def lloyd(spark: SparkSession, e: DataFrame,
-    k: Int): Array[(Int, Array[Double])] = {
-    // bounded deterministic id-hash sample (see trainPpc): the count is a
-    // metadata-cheap parquet job and training is rare (model-blob cached)
-    val m = lloydSampleModulus(e.count(), k)
+    k: Int, n: Long): Array[(Int, Array[Double])] = {
+    // bounded deterministic id-hash sample (see trainPpc); `n` = rows of `e`,
+    // which every caller already counted to size k
+    val m = lloydSampleModulus(n, k)
     val sample = e.filter(pmod(col("vec_id"), lit(m)) === 0)
     var codebook: Array[(Int, Array[Double])] = e.filter(col("vec_id") < k)
       .collect().map { r =>
@@ -1734,7 +1774,8 @@ object Similarity {
     val probeCids = probeRank(codebook, p, nProbe)
     val probeLit = typedlit(p.toSeq)
     paths.map { path =>
-      spark.read.parquet(path)
+      // a layout's schema is resolved once per session and store sidecar
+      graft.Tables.readParquet(spark, path, graft.StoreFp.dirFp(path))
         .filter(col("cid").isin(probeCids: _*)) // → PartitionFilters: file-level pruning
         .filter(col("vec_id") =!= 0)
     }.reduce(_.unionByName(_))
@@ -1773,7 +1814,7 @@ object Similarity {
         cbToLines(lloyd(spark, Tables.load(spark, sfDir, "embeddings")
           .filter(col("vec_id") % 10 =!= 9)
           .select(col("vec_id"), asDouble(col("embedding")).as("v")),
-          corpusIvfKFor(spark, sfDir)))
+          corpusIvfKFor(spark, sfDir), corpusCount(spark, sfDir)))
       })
       ivfAppendState(sfDir) = (tag, cb)
       cb
@@ -2466,7 +2507,8 @@ object Similarity {
           "semantic_codebook" + dirSlug(sfDir), tag) {
           val e = Tables.load(spark, sfDir, "embeddings")
             .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-          cbToLines(lloyd(spark, e, semanticK(e.count())))
+          val n = embCount(spark, sfDir)
+          cbToLines(lloyd(spark, e, semanticK(n), n))
         })
         semanticCodebookCache(sfDir) = (tag, cb)
         cb

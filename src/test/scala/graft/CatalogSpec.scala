@@ -13,6 +13,20 @@ class CatalogSpec extends SparkSpec {
     new GraftCatalog(spark, root, format, maxRecordsPerFile)
   }
 
+  /** Rewrites the `_graft.json` of `table` (root-relative) through a JSON
+    * edit of its root object, bypassing the catalog. */
+  private def editSidecar(table: String)(
+    edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+    val m = new java.io.File(s"${GraftConf.localRoot}/test_edfs/$table/_graft.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.readTree(m).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(root)
+    java.nio.file.Files.write(m.toPath, mapper.writeValueAsBytes(root))
+    // the edit bypassed the checksummed fs: drop the stale .crc sidecar-sidecar
+    java.nio.file.Files.deleteIfExists(
+      new java.io.File(m.getParentFile, "._graft.json.crc").toPath)
+  }
+
   test("mkdir/ls/rm namespace semantics") {
     val cat = freshCatalog("ns")
     assert(cat.mkdir("a/b/c"))
@@ -497,16 +511,32 @@ class CatalogSpec extends SparkSpec {
     assert(cat.cat("t").count() == cleanCount)
     // untracked tables refuse both ops
     cat.put(src, "legacy", HashPartition("n_regionkey"))
-    val m = new java.io.File(s"${GraftConf.localRoot}/test_edfs/vacuum/legacy/_graft.json")
-    // strip the versions array to simulate a pre-snapshot writer
-    val raw = new String(java.nio.file.Files.readAllBytes(m.toPath))
-    java.nio.file.Files.write(m.toPath,
-      raw.replaceAll(""","versions":\[.*]""", "").getBytes)
-    // the edit bypassed the checksummed fs: drop the stale .crc sidecar-sidecar
-    java.nio.file.Files.deleteIfExists(
-      new java.io.File(m.getParentFile, "._graft.json.crc").toPath)
+    // remove the versions field to simulate a pre-snapshot writer
+    editSidecar("vacuum/legacy")(_.remove("versions"))
     intercept[RuntimeException](cat.vacuum("legacy"))
     intercept[RuntimeException](cat.expireSnapshots("legacy", 1))
+  }
+
+  test("a legacy range manifest that lists no bucket file refuses readVersion and vacuum") {
+    val cat = freshCatalog("legacy_range")
+    val src = Tables.load(spark, sfDir, "orders")
+    cat.put(src, "t", RangePartition("o_totalprice", 4))
+    assert(cat.readVersion("t", 1).count() == src.count())
+    // the manifest an older writer left: its listing skipped every
+    // `__graft_bucket=<n>` directory, so the snapshot names no file
+    editSidecar("legacy_range/t") { root =>
+      val va = root.putArray("versions")
+      va.addArray()
+    }
+    assert(cat.snapshotCount("t") == 1)
+    for (op <- Seq[() => Any](() => cat.readVersion("t", 1), () => cat.vacuum("t"))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("re-put the table"), e.getMessage)
+    }
+    // nothing was deleted, and a re-put serves snapshots again
+    assert(cat.cat("t").count() == src.count())
+    cat.put(src, "t", RangePartition("o_totalprice", 4))
+    assert(cat.readVersion("t", 1).count() == src.count())
   }
 
   test("replicated put survives single-replica loss; double loss is loud") {

@@ -219,20 +219,10 @@ class PartialsSpec extends SparkSpec {
   test("a served stat launches no Spark job") {
     val cat = freshCatalog("nojobs")
     cat.put(batch(new SplittableRandom(9), 50, 0), "t", HashPartition("k"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val got = Seq(
-        Pmr.statAvg(cat.cat("t"), "x").head(),
-        Pmr.statMin(cat.cat("t"), "y", referenceNan = true).head(),
-        Pmr.statMax(cat.readPartition("t", "k", 2), "x").head())
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      assert(jobs.get == 0, s"served stats ran ${jobs.get} job(s): $got")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (got, jobs) = jobsDuring(Seq(
+      Pmr.statAvg(cat.cat("t"), "x").head(),
+      Pmr.statMin(cat.cat("t"), "y", referenceNan = true).head(),
+      Pmr.statMax(cat.readPartition("t", "k", 2), "x").head()))
+    assert(jobs == 0, s"served stats ran $jobs job(s): $got")
   }
 }

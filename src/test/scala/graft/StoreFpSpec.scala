@@ -231,4 +231,70 @@ class StoreFpSpec extends SparkSpec {
     assert(mtimes() == m1,
       "a valid persisted IVF layout was rewritten after memo eviction")
   }
+
+  test("IVF adoption in a cleared session learns the K tag with no Spark job") {
+    // stores built or adopted, and the embeddings schema resolved
+    operators.Similarity.simIvfPruned(spark, sfDir).collect()
+    operators.Similarity.clearCaches()
+    val (_, adoptJobs) = jobsDuring(operators.Similarity.ensureIvfIndex(spark, sfDir))
+    assert(adoptJobs == 0, s"adoption ran $adoptJobs job(s)")
+    val n = Tables.load(spark, sfDir, "embeddings").count()
+    assert(operators.Similarity.ivfKFor(spark, sfDir) == operators.Similarity.ivfK(n))
+    // the probe builder's only eager job left is the query-vector lookup
+    operators.Similarity.clearCaches()
+    val (_, buildJobs) = jobsDuring(operators.Similarity.simIvfPruned(spark, sfDir))
+    assert(buildJobs <= 1, s"adoption plus the probe build ran $buildJobs job(s)")
+  }
+
+  test("an added embeddings file still forces the IVF stores to rebuild") {
+    val src = new java.io.File(s"${GraftConf.localRoot}/test_ivf_src")
+    val slug = src.getAbsolutePath.replaceAll("[^A-Za-z0-9]+", "_")
+    val layout = new java.io.File(s"${GraftConf.localRoot}/graft_ivf/$slug")
+    val model = new java.io.File(s"${GraftConf.localRoot}/graft_models/ivf_codebook$slug")
+    def clean(): Unit = Seq(src, layout, model)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    clean()
+    val table = new java.io.File(src, "embeddings.parquet").getAbsolutePath
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    e.coalesce(1).write.parquet(table)
+    try {
+      operators.Similarity.clearCaches()
+      operators.Similarity.ensureIvfIndex(spark, src.getAbsolutePath)
+      val fp1 = StoreFp.dirFp(layout.getAbsolutePath)
+      assert(fp1.exists(_.startsWith(Tables.fingerprint(src.getAbsolutePath, "embeddings"))))
+      val n1 = spark.read.parquet(layout.getAbsolutePath).count()
+      val top = e.agg(max(col("vec_id"))).head().getAs[Number](0).longValue
+      e.filter(col("vec_id") < 40)
+        .withColumn("vec_id", (col("vec_id") + top + 1).cast(e.schema("vec_id").dataType))
+        .coalesce(1).write.mode("append").parquet(table)
+      operators.Similarity.clearCaches()
+      operators.Similarity.ensureIvfIndex(spark, src.getAbsolutePath)
+      val fp2 = StoreFp.dirFp(layout.getAbsolutePath)
+      assert(fp2 != fp1, "an added source file left the layout's fingerprint unchanged")
+      assert(fp2.exists(_.startsWith(Tables.fingerprint(src.getAbsolutePath, "embeddings"))))
+      assert(spark.read.parquet(layout.getAbsolutePath).count() == n1 + 40,
+        "the layout was adopted instead of rebuilt from the changed source")
+    } finally {
+      operators.Similarity.clearCaches()
+      clean()
+    }
+  }
+
+  test("the footer row count equals count() beside _SUCCESS, .crc and empty part files") {
+    val dir = new java.io.File(s"${GraftConf.localRoot}/test_footer_rows")
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    val table = new java.io.File(dir, "embeddings.parquet")
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    e.repartition(2).write.parquet(table.getAbsolutePath)
+    // a part file with a footer and no row, and one of zero bytes
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], e.schema)
+      .write.mode("append").parquet(table.getAbsolutePath)
+    java.nio.file.Files.createFile(new java.io.File(table, "part-99999-empty.parquet").toPath)
+    val names = table.list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+    assert(names.count(_.startsWith("part-")) == 4, names)
+    val df = Tables.load(spark, dir.getAbsolutePath, "embeddings")
+    assert(operators.Similarity.footerRows(df).contains(df.count()))
+    assert(df.count() == e.count())
+  }
 }

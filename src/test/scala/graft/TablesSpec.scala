@@ -119,4 +119,66 @@ class TablesSpec extends SparkSpec {
     assert(Tables.events(spark, sfDir).schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
   }
+
+  /** A fresh dir under the test root holding `<name>.parquet` with
+    * `cols` integer columns and 3 rows. */
+  private def writeTable(dir: java.io.File, name: String, cols: Seq[String]): Unit =
+    spark.range(3).select(cols.map(c => col("id").as(c)): _*)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(new java.io.File(dir, s"$name.parquet").getAbsolutePath)
+
+  private def freshDir(tag: String): java.io.File = {
+    val dir = new java.io.File(s"${GraftConf.localRoot}/test_tables_$tag")
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    dir
+  }
+
+  test("a warm load launches no job; a rewrite with an added column serves the new schema") {
+    val dir = freshDir("resolver")
+    writeTable(dir, "t", Seq("a", "b"))
+    val (cold, coldJobs) = jobsDuring(Tables.load(spark, dir.getPath, "t"))
+    assert(coldJobs >= 1, "the first load should infer the schema with a job")
+    val (warm, warmJobs) = jobsDuring(Tables.load(spark, dir.getPath, "t"))
+    assert(warmJobs == 0, s"a warm load launched $warmJobs job(s)")
+    assert(warm.schema == cold.schema)
+    assert(warm.queryExecution.analyzed.sameResult(cold.queryExecution.analyzed))
+    val fp = Tables.fingerprint(dir.getPath, "t")
+    writeTable(dir, "t", Seq("a", "b", "c"))
+    assert(Tables.fingerprint(dir.getPath, "t") != fp)
+    val after = Tables.load(spark, dir.getPath, "t")
+    assert(after.schema.fieldNames.toSeq == Seq("a", "b", "c"))
+    assert(after.select(sum("c")).head().getLong(0) == 3L)
+  }
+
+  test("fingerprints go through the path's filesystem: a file: URI fingerprints and invalidates") {
+    val dir = freshDir("uri")
+    writeTable(dir, "t", Seq("a"))
+    // the string java.io.File gave for a local path, which persisted store
+    // sidecars record: files directly under the dir, metadata files included
+    def legacy(): String = {
+      val leaves = new java.io.File(dir, "t.parquet").listFiles().filter(_.isFile)
+      s"${leaves.length}:${leaves.map(_.length).sum}:${leaves.map(_.lastModified).max}"
+    }
+    val uri = "file:" + dir.getAbsolutePath
+    val fp = Tables.fingerprint(uri, "t")
+    assert(fp == legacy() && Tables.fingerprint(dir.getPath, "t") == fp)
+    assert(fp.split(':')(0).toInt >= 3, s"_SUCCESS and .crc files must count: $fp")
+    assert(Tables.fingerprint(uri, "missing") == "1:0:0")
+    assert(Tables.load(spark, uri, "t").schema.fieldNames.toSeq == Seq("a"))
+    writeTable(dir, "t", Seq("a", "b"))
+    assert(Tables.fingerprint(uri, "t") != fp)
+    assert(Tables.load(spark, uri, "t").schema.fieldNames.toSeq == Seq("a", "b"))
+  }
+
+  test("a table dir with subdirectories is never served a cached schema") {
+    // the fingerprint sees only the top-level files, so a change inside a
+    // partition directory would go unseen: every load infers again
+    val dir = freshDir("nested")
+    spark.range(4).select(col("id").as("a"), (col("id") % 2).as("p"))
+      .write.partitionBy("p").parquet(new java.io.File(dir, "t.parquet").getAbsolutePath)
+    Tables.load(spark, dir.getPath, "t")
+    val (df, jobs) = jobsDuring(Tables.load(spark, dir.getPath, "t"))
+    assert(jobs >= 1, "a partitioned table's schema was served from the cache")
+    assert(df.count() == 4)
+  }
 }
