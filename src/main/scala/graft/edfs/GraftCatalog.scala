@@ -787,6 +787,9 @@ class GraftCatalog(spark: SparkSession, root: String,
     * kind "none" explicitly and is unaffected. */
   private val UnknownScheme = "unknown"
 
+  /** Kinds whose files live under `__graft_bucket=<n>` directories. */
+  private val BucketDirKinds = Set("bucketed_hash", "range")
+
   private def parseSidecar(raw: String): Sidecar = {
     // malformed JSON or missing keys degrade to defaults (scheme → the
     // UnknownScheme sentinel) rather than throwing: a foreign, hand-edited,
@@ -826,7 +829,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     readMeta(path).foreach { m =>
       require(m.scheme.kind != UnknownScheme,
         s"$op: sidecar at $path has no recoverable scheme — refusing to guess the layout")
-      require(!(Set("bucketed_hash", "range")(m.scheme.kind) && m.scheme.buckets <= 0),
+      require(!(BucketDirKinds(m.scheme.kind) && m.scheme.buckets <= 0),
         s"$op: sidecar at $path declares ${m.scheme.kind} with buckets=${m.scheme.buckets}")
     }
 
@@ -987,7 +990,10 @@ class GraftCatalog(spark: SparkSession, root: String,
       s"time travel: $path has no snapshot history (written by a pre-snapshot writer?)")
     require(v >= 1 && v <= m.versions.length,
       s"time travel: version $v out of range 1..${m.versions.length} at $path")
-    requireBucketFilesListed("time travel", path, m.versions.flatten.toSet, listLeafFiles(path))
+    // only a bucket-directory layout (or one the sidecar no longer names)
+    // can hold such a manifest; hash and flat tables skip the listing
+    if (BucketDirKinds(m.scheme.kind) || m.scheme.kind == UnknownScheme)
+      requireBucketFilesListed("time travel", path, m.versions.flatten.toSet, listLeafFiles(path))
     val files = m.versions.take(v).flatten.map(rel => new Path(abs(path), rel))
     // loud, diagnosable failure over a runtime FileNotFound mid-scan: a
     // dangling manifest means some physical delete bypassed the truncation

@@ -1301,13 +1301,9 @@ object Similarity {
   }
 
   /** Rows of the full embeddings table: [[footerRows]], so a fresh session
-    * learns the K tag from metadata, with `count()` for a source that is no
-    * plain parquet scan. */
+    * learns the K tag from metadata. */
   private def embCount(spark: SparkSession, sfDir: String): Long =
-    memoCount(embCountCache, sfDir) {
-      val e = Tables.load(spark, sfDir, "embeddings")
-      footerRows(e).getOrElse(e.count())
-    }
+    memoCount(embCountCache, sfDir)(footerRows(Tables.load(spark, sfDir, "embeddings")))
 
   /** Rows of the corpus slice (vec_id % 10 <> 9) the corpus codebook trains on. */
   private def corpusCount(spark: SparkSession, sfDir: String): Long =
@@ -1317,9 +1313,10 @@ object Similarity {
 
   /** Row count of a plain parquet scan, summed on the driver from the
     * footers of the files the relation's own file index lists (the listing
-    * the scan would read: no `_SUCCESS`, `.crc` or zero-length file). None
-    * when `df` is anything but an unfiltered parquet relation. */
-  private[graft] def footerRows(df: DataFrame): Option[Long] = {
+    * the scan would read: no `_SUCCESS`, `.crc` or zero-length file). The
+    * footers are read one after another, so the cost grows with the file
+    * count. Fails when `df` is anything but an unfiltered parquet relation. */
+  private[graft] def footerRows(df: DataFrame): Long = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import scala.jdk.CollectionConverters._
@@ -1327,8 +1324,8 @@ object Similarity {
       case l: LogicalRelation => Some(l.relation)
       case _ => None
     }
-    relation.collect {
-      case fsRel: HadoopFsRelation if fsRel.fileFormat.isInstanceOf[ParquetFileFormat] =>
+    relation match {
+      case Some(fsRel: HadoopFsRelation) if fsRel.fileFormat.isInstanceOf[ParquetFileFormat] =>
         val conf = df.sparkSession.sessionState.newHadoopConf()
         fsRel.location.listFiles(Nil, Nil).flatMap(_.files).map { f =>
           org.apache.parquet.hadoop.ParquetFileReader.readFooter(
@@ -1336,6 +1333,8 @@ object Similarity {
             org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
             .getBlocks.asScala.map(_.getRowCount).sum
         }.sum
+      case _ => sys.error("footerRows: not a plain parquet relation:\n" +
+        df.queryExecution.analyzed.treeString)
     }
   }
 
