@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Session tuning for graft workloads — the knobs that matter at 100 TB,
@@ -16,27 +17,30 @@ object GraftConf {
     sys.props.get("graft.local.root")
       .getOrElse(sys.props.getOrElse("user.dir", ".") + "/target")
 
+  /** The name fragment a scale-factor dir (or any source path) gives every
+    * store, table and catalog root derived from it: each run of
+    * non-alphanumerics becomes `_`. */
+  def slug(dir: String): String = dir.replaceAll("[^A-Za-z0-9]+", "_")
+
+  /** The session's warehouse directory. The conf is a URI STRING (Spark
+    * escapes it), so it is decoded through java.net.URI first — Path(String)
+    * would keep the escapes as literal path characters (a dir with '%' or a
+    * space mis-targets); values URI refuses to parse fall back to the
+    * raw-path form. Resolved through Hadoop's Path, a plain path, a `file:`
+    * URI and a remote scheme all route to the right filesystem. */
+  def warehouseDir(spark: SparkSession): Path = {
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    try new Path(new java.net.URI(wh))
+    catch {
+      case _: java.net.URISyntaxException | _: IllegalArgumentException => new Path(wh)
+    }
+  }
+
   /** Delete an ORPHAN managed-table directory under the warehouse (left by a
     * previous session, unknown to this session's in-memory catalog) so
-    * `saveAsTable` can claim the location. The warehouse URI is resolved
-    * through Hadoop's Path/FileSystem, so a plain path, a `file:` URI and a
-    * remote scheme all route to the right filesystem — string-stripping the
-    * scheme handled only the bare `file:` form and would have skipped or
-    * mis-targeted the delete (and left `saveAsTable` refusing the location)
-    * for every other warehouse URI. */
+    * `saveAsTable` can claim the location. */
   def deleteOrphanTableDir(spark: SparkSession, tbl: String): Unit = {
-    // the warehouse conf is a URI STRING (Spark escapes it), so decode it
-    // through java.net.URI first — Path(String) would keep the escapes as
-    // literal path characters (a dir with '%' or a space mis-targets);
-    // fall back to the raw-path form for values URI refuses to parse
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val parent =
-      try new org.apache.hadoop.fs.Path(new java.net.URI(wh))
-      catch {
-        case _: java.net.URISyntaxException | _: IllegalArgumentException =>
-          new org.apache.hadoop.fs.Path(wh)
-      }
-    val p = new org.apache.hadoop.fs.Path(parent, tbl)
+    val p = new Path(warehouseDir(spark), tbl)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) { fs.delete(p, true); () }
   }

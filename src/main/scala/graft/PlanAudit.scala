@@ -11,11 +11,7 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
       // audit-only: a static (non-AQE) plan exposes codegen subtrees and the
       // pre-runtime join strategy; production runs keep AQE on
       .config("spark.sql.adaptive.enabled", "false")

@@ -41,18 +41,8 @@ object StoreFp {
   private[graft] val SidecarName = "_graft_store_fp"
 
   private def warehouseTableDir(spark: SparkSession,
-    tbl: String): org.apache.hadoop.fs.Path = {
-    // URI-decode like GraftConf.deleteOrphanTableDir: the conf value is an
-    // escaped URI string
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val parent =
-      try new org.apache.hadoop.fs.Path(new java.net.URI(wh))
-      catch {
-        case _: java.net.URISyntaxException | _: IllegalArgumentException =>
-          new org.apache.hadoop.fs.Path(wh)
-      }
-    new org.apache.hadoop.fs.Path(parent, tbl.toLowerCase(java.util.Locale.ROOT))
-  }
+    tbl: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(GraftConf.warehouseDir(spark), tbl.toLowerCase(java.util.Locale.ROOT))
 
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())

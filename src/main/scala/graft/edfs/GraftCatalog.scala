@@ -819,7 +819,7 @@ class GraftCatalog(spark: SparkSession, root: String,
           arr.elements().asScala.map(_.asText).toSeq).toSeq
       }.getOrElse(Nil),
       optNode(top, "replication").map(_.asInt).getOrElse(1),
-      optNode(top, "partials").map(Partials.parseDirs).getOrElse(Map.empty))
+      optNode(top, "partials").flatMap(Partials.parseDirs).getOrElse(Map.empty))
   }
 
   /** Refuse layout-dependent writes when the recorded scheme is incoherent —
@@ -1162,18 +1162,19 @@ object GraftCatalog {
   import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
-  /** The write-time partial of `column` over exactly the rows `df` yields,
-    * with their row count — or None unless that is provable from metadata
-    * alone. Provable means: `df` is a plain parquet/orc scan of a catalog
-    * table root (`cat`, `readPartition`), under nothing but attribute-only
-    * projections and filters on partition columns; the column is a
-    * primitive numeric data column; and for every directory the scan would
-    * read, the sidecar records a partial whose file list (name, length)
-    * equals the listing the scan holds. The directories are pruned by the
-    * relation's own file index, in memory, exactly as the scan would prune
-    * them. Crash residue, a rewritten file, a replicated table, a snapshot
-    * read (`readVersion`) or a foreign table all yield None. */
-  def partialOf(df: DataFrame, column: String): Option[(Long, ColPartial)] = {
+  /** The partials of `column` over exactly the rows `df` yields, one per
+    * directory its scan reads, or None. It needs: `df` is a plain
+    * parquet/orc scan of a catalog table root (`cat`, `readPartition`),
+    * under nothing but attribute-only projections and filters on partition
+    * columns; the column is a primitive numeric data column; the table is
+    * neither replicated nor foreign, and its sidecar has a known scheme and
+    * records partials (or the scan reads no file). The directories are
+    * pruned by the relation's own file index, exactly as the scan prunes
+    * them. A clean directory, whose listed files (name, length) equal the
+    * ones its partial covers, gives that partial; the others (residue, a
+    * rewritten file, a column the partial lacks) get theirs from one job
+    * over just their listed files. Nothing is written back. */
+  def dirPartials(df: DataFrame, column: String): Option[ScanPartials] = {
     def scan(p: LogicalPlan, filters: Seq[Expression])
       : Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = p match {
       case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) =>
@@ -1200,27 +1201,38 @@ object GraftCatalog {
         case _: OrcFileFormat => Some("orc")
         case _ => None
       }
-      partAttrs = AttributeSet(
-        rel.output.filter(a => fsRel.partitionSchema.fieldNames.contains(a.name)))
+      partCols = fsRel.partitionSchema.fieldNames.toSeq
+      if partCols.size <= 1
+      partAttrs = AttributeSet(rel.output.filter(a => partCols.contains(a.name)))
       attr <- rel.output.find(_.exprId == target.exprId)
       if !partAttrs.contains(attr) && Partials.isPrimitive(attr.dataType)
       if filters.forall(f => f.deterministic && !SubqueryExpression.hasSubquery(f) &&
         f.references.subsetOf(partAttrs))
       // a one-file snapshot read is rooted at that file: no sidecar below it
-      m <- scala.util.Try(new GraftCatalog(spark, root.toString, fmt).readMeta("")).toOption.flatten
-      if m.replication == 1 && m.format == fmt
+      cat = new GraftCatalog(spark, root.toString, fmt)
+      m <- scala.util.Try(cat.readMeta("")).toOption.flatten
+      if m.replication == 1 && m.format == fmt && m.scheme.kind != cat.UnknownScheme
       served <- {
         val rootPath = root.toUri.getPath
+        // the index drops zero-length files; they hold no rows
         val listed = fsRel.location.listFiles(filters, Nil).flatMap(_.files)
           .groupBy(f => f.getPath.getParent.toUri.getPath.stripPrefix(rootPath).stripPrefix("/"))
-          .map { case (d, fs) => d -> fs.map(f => f.getPath.getName -> f.getLen).toMap }
-        // the index drops zero-length files; they hold no rows
-        val dirs = listed.toSeq.map { case (d, files) =>
-          m.partials.get(d).filter(_.files.filter(_._2 > 0) == files) }
-        val cols = dirs.map(_.flatMap(_.cols.get(attr.name).filter(_.dataType == attr.dataType)))
-        if (!cols.forall(_.isDefined)) None
-        else Some((dirs.flatten.map(_.rows).sum, cols.flatten.reduceOption(_ + _)
-          .getOrElse(ColPartial(attr.dataType, 0, 0, None, None, Some(java.math.BigDecimal.ZERO)))))
+        val recorded = listed.map { case (d, files) =>
+          d -> m.partials.get(d)
+            .filter(_.files.filter(_._2 > 0) == files.map(f => f.getPath.getName -> f.getLen).toMap)
+            .flatMap(p => p.cols.get(attr.name).filter(_.dataType == attr.dataType).map(p.rows -> _))
+        }
+        val dirty = recorded.collect { case (d, None) => d }.toSet
+        val fresh =
+          if (dirty.isEmpty) Some(Map.empty[String, (Long, ColPartial)])
+          else if (m.partials.isEmpty) None // written without partials: scanned
+          else Partials.compute(cat.loadData("", Some(dirty.toSeq.flatMap(listed).map(_.getPath))),
+            partCols.headOption, attr.name).map(_.dirs)
+            // a directory name the aggregate does not reproduce is no proof
+            .filter(_.keySet.subsetOf(dirty))
+        // a dirty directory the aggregate saw no row of holds none
+        fresh.map(f => ScanPartials(attr.dataType,
+          recorded.flatMap { case (d, p) => p.orElse(f.get(d)).map(d -> _) }))
       }
     } yield served
   }

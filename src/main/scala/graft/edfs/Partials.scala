@@ -45,6 +45,14 @@ final case class DirPartial(files: Map[String, Long], rows: Long, cols: Map[Stri
     })
 }
 
+/** One column's partials over the directories a scan reads: directory →
+  * (rows, partial). The reduce of the map step. */
+final case class ScanPartials(dataType: DataType, dirs: Map[String, (Long, ColPartial)]) {
+  def rows: Long = dirs.values.map(_._1).sum
+  def total: ColPartial = dirs.values.map(_._2).foldLeft(
+    ColPartial(dataType, 0, 0, None, None, Some(java.math.BigDecimal.ZERO)))(_ + _)
+}
+
 object Partials {
 
   /** Storage formats whose round trip of primitive numerics is exact, so a
@@ -126,12 +134,11 @@ object Partials {
   def renderDirs(node: ObjectNode, dirs: Map[String, DirPartial]): Unit =
     dirs.toSeq.sortBy(_._1).foreach { case (d, p) => renderDir(node.putObject(d), p) }
 
-  /** All-or-nothing: a partials object with one malformed entry yields none. */
-  def parseDirs(node: JsonNode): Map[String, DirPartial] = {
+  /** All-or-nothing: a partials object with one malformed entry yields None. */
+  def parseDirs(node: JsonNode): Option[Map[String, DirPartial]] = {
     import scala.jdk.CollectionConverters._
     val parsed = node.fields().asScala.map(e => e.getKey -> parseDir(e.getValue)).toSeq
-    if (parsed.forall(_._2.isDefined)) parsed.map { case (k, v) => k -> v.get }.toMap
-    else Map.empty
+    Option.when(parsed.forall(_._2.isDefined))(parsed.map { case (k, v) => k -> v.get }.toMap)
   }
 
   // ----- the observed write-time aggregate -----
@@ -344,7 +351,7 @@ object Partials {
       // metrics reach the Observation through the listener bus, so they
       // can land just after the write call returns
       scala.util.Try(Await.result(o.future, 10.seconds)).toOption
-        .map(r => parseDirs(mapper.readTree(r.getString(0))))
+        .flatMap(r => parseDirs(mapper.readTree(r.getString(0))))
     }
   }
 
@@ -353,14 +360,27 @@ object Partials {
     * partition column. Disabled, the frame is written as it is. */
   def observe(frame: DataFrame, partCol: Option[String], enabled: Boolean): Observed =
     if (!enabled) new Observed(frame, None)
-    else {
-      def c(name: String) = UnresolvedAttribute.quoted(name)
-      val names = frame.schema.fields
-        .filter(f => isPrimitive(f.dataType) && !partCol.contains(f.name)).map(_.name).toSeq
-      val agg = PartialsAgg(partCol.map(c).toSeq ++ names.map(c), partCol.isDefined,
-        partCol.getOrElse(""), frame.sparkSession.sessionState.conf.sessionLocalTimeZone, names)
-      val o = Observation()
-      new Observed(frame.observe(o,
-        GraftColumn(agg.toAggregateExpression()).as("partials")), Some(o))
-    }
+    else observe(frame, partCol, frame.schema.fields
+      .filter(f => isPrimitive(f.dataType) && !partCol.contains(f.name)).map(_.name).toSeq)
+
+  private def observe(frame: DataFrame, partCol: Option[String], names: Seq[String]): Observed = {
+    def c(name: String) = UnresolvedAttribute.quoted(name)
+    val agg = PartialsAgg(partCol.map(c).toSeq ++ names.map(c), partCol.isDefined,
+      partCol.getOrElse(""), frame.sparkSession.sessionState.conf.sessionLocalTimeZone, names)
+    val o = Observation()
+    new Observed(frame.observe(o,
+      GraftColumn(agg.toAggregateExpression()).as("partials")), Some(o))
+  }
+
+  /** The partials of the primitive numeric `column` over the rows of
+    * `frame`, one per partition directory of `partCol` that holds a row:
+    * the aggregate a write observes, observed over a `noop` write, so it
+    * costs one job (a plain `agg` would add a shuffle stage). None when the
+    * metrics never arrive. */
+  def compute(frame: DataFrame, partCol: Option[String], column: String): Option[ScanPartials] = {
+    val observed = observe(frame, partCol, Seq(column))
+    observed.frame.write.format("noop").mode("overwrite").save()
+    observed.collect().map(dirs => ScanPartials(frame.schema(column).dataType,
+      dirs.map { case (d, p) => d -> (p.rows, p.cols(column)) }))
+  }
 }

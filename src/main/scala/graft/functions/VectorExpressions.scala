@@ -978,36 +978,40 @@ object GraftFunctions {
       s"graft_minhash_sig expects 1 argument, got ${other.size}")
   }
 
+  /** Every graft SQL function: the one list both the session extensions
+    * ([[GraftExtensions]]) and [[ensureRegistered]] register. */
+  lazy val All: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("graft_cosine"), cosineInfo, cosineBuilder),
+    (FunctionIdentifier("graft_nearest_cid"), nearestCidInfo, nearestCidBuilder),
+    (FunctionIdentifier("graft_nearest_cid_bc"), nearestCidBcInfo, nearestCidBcBuilder),
+    (FunctionIdentifier("graft_nearest_cids_bc"), nearestCidsBcInfo, nearestCidsBcBuilder),
+    (FunctionIdentifier("graft_sig_agreement"), sigAgreementInfo, sigAgreementBuilder),
+    (FunctionIdentifier("graft_might_contain"), mightContainInfo, mightContainBuilder),
+    (FunctionIdentifier("graft_fingerprint"), fingerprintInfo, fingerprintBuilder),
+    (FunctionIdentifier("graft_token_weight"), tokenWeightInfo, tokenWeightBuilder),
+    (FunctionIdentifier("graft_ntz_utc"), ntzUtcInfo, ntzUtcBuilder),
+    (FunctionIdentifier("graft_stop_hits"), stopHitsInfo, stopHitsBuilder),
+    (FunctionIdentifier("graft_distinct_bigrams"), distinctBigramsInfo, distinctBigramsBuilder),
+    (FunctionIdentifier("graft_gram_set"), wordGramSetInfo, wordGramSetBuilder),
+    (FunctionIdentifier("graft_gopher_stats"), gopherStatsInfo, gopherStatsBuilder),
+    (FunctionIdentifier("graft_bpe_count"), bpeCountInfo, bpeCountBuilder),
+    (FunctionIdentifier("graft_bpe_merge_count"), bpeMergeCountInfo, bpeMergeCountBuilder),
+    (FunctionIdentifier("graft_top_gram"), topGramInfo, topGramBuilder),
+    (FunctionIdentifier("graft_gram_hits"), gramHitsInfo, gramHitsBuilder),
+    (FunctionIdentifier("graft_gram_marks"), gramMarksInfo, gramMarksBuilder),
+    (FunctionIdentifier("graft_pq_codes"), pqCodesInfo, pqCodesBuilder),
+    (FunctionIdentifier("graft_adc_table"), adcTableInfo, adcTableBuilder),
+    (FunctionIdentifier("graft_minhash_sig"), minhashSigInfo, minhashSigBuilder),
+    (FunctionIdentifier("graft_lm_score"), lmScoreInfo, lmScoreBuilder),
+    (FunctionIdentifier("graft_lm_score_bc"), lmScoreBcInfo, lmScoreBcBuilder))
+
   /** Idempotently register into an existing session (works regardless of how
     * the session was built — e.g. a driver-owned session without extensions). */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    Seq((FunctionIdentifier("graft_cosine"), cosineInfo, cosineBuilder),
-      (FunctionIdentifier("graft_nearest_cid"), nearestCidInfo, nearestCidBuilder),
-      (FunctionIdentifier("graft_nearest_cid_bc"), nearestCidBcInfo, nearestCidBcBuilder),
-      (FunctionIdentifier("graft_nearest_cids_bc"), nearestCidsBcInfo, nearestCidsBcBuilder),
-      (FunctionIdentifier("graft_sig_agreement"), sigAgreementInfo, sigAgreementBuilder),
-      (FunctionIdentifier("graft_might_contain"), mightContainInfo, mightContainBuilder),
-      (FunctionIdentifier("graft_fingerprint"), fingerprintInfo, fingerprintBuilder),
-      (FunctionIdentifier("graft_token_weight"), tokenWeightInfo, tokenWeightBuilder),
-      (FunctionIdentifier("graft_ntz_utc"), ntzUtcInfo, ntzUtcBuilder),
-      (FunctionIdentifier("graft_stop_hits"), stopHitsInfo, stopHitsBuilder),
-      (FunctionIdentifier("graft_distinct_bigrams"), distinctBigramsInfo, distinctBigramsBuilder),
-      (FunctionIdentifier("graft_gram_set"), wordGramSetInfo, wordGramSetBuilder),
-      (FunctionIdentifier("graft_gopher_stats"), gopherStatsInfo, gopherStatsBuilder),
-      (FunctionIdentifier("graft_bpe_count"), bpeCountInfo, bpeCountBuilder),
-      (FunctionIdentifier("graft_bpe_merge_count"), bpeMergeCountInfo, bpeMergeCountBuilder),
-      (FunctionIdentifier("graft_top_gram"), topGramInfo, topGramBuilder),
-      (FunctionIdentifier("graft_gram_hits"), gramHitsInfo, gramHitsBuilder),
-      (FunctionIdentifier("graft_gram_marks"), gramMarksInfo, gramMarksBuilder),
-      (FunctionIdentifier("graft_pq_codes"), pqCodesInfo, pqCodesBuilder),
-      (FunctionIdentifier("graft_adc_table"), adcTableInfo, adcTableBuilder),
-      (FunctionIdentifier("graft_minhash_sig"), minhashSigInfo, minhashSigBuilder),
-      (FunctionIdentifier("graft_lm_score"), lmScoreInfo, lmScoreBuilder),
-      (FunctionIdentifier("graft_lm_score_bc"), lmScoreBcInfo, lmScoreBcBuilder))
-      .foreach { case (id, info, builder) =>
-        if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
-      }
+    All.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 
   /** Column-API entry point: fused token fingerprint (C11). */
@@ -1428,40 +1432,6 @@ case class AdcTable(child: Expression, m: Int, ks: Int, dsub: Int,
 
 /** Extensions entry point: `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    // reuse the registry builders: the inline duplicates threw raw
-    // MatchErrors on wrong arity instead of the builders' argument errors
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      GraftFunctions.cosineInfo, GraftFunctions.cosineBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_nearest_cid"),
-      GraftFunctions.nearestCidInfo, GraftFunctions.nearestCidBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_nearest_cid_bc"),
-      GraftFunctions.nearestCidBcInfo, GraftFunctions.nearestCidBcBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_sig_agreement"),
-      GraftFunctions.sigAgreementInfo, GraftFunctions.sigAgreementBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_might_contain"),
-      GraftFunctions.mightContainInfo, GraftFunctions.mightContainBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_fingerprint"),
-      GraftFunctions.fingerprintInfo, GraftFunctions.fingerprintBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_token_weight"),
-      GraftFunctions.tokenWeightInfo, GraftFunctions.tokenWeightBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_ntz_utc"),
-      GraftFunctions.ntzUtcInfo, GraftFunctions.ntzUtcBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_stop_hits"),
-      GraftFunctions.stopHitsInfo, GraftFunctions.stopHitsBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_distinct_bigrams"),
-      GraftFunctions.distinctBigramsInfo, GraftFunctions.distinctBigramsBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_gopher_stats"),
-      GraftFunctions.gopherStatsInfo, GraftFunctions.gopherStatsBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_count"),
-      GraftFunctions.bpeCountInfo, GraftFunctions.bpeCountBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_bpe_merge_count"),
-      GraftFunctions.bpeMergeCountInfo, GraftFunctions.bpeMergeCountBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      GraftFunctions.minhashSigInfo, GraftFunctions.minhashSigBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_adc_table"),
-      GraftFunctions.adcTableInfo, GraftFunctions.adcTableBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_gram_set"),
-      GraftFunctions.wordGramSetInfo, GraftFunctions.wordGramSetBuilder))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.All.foreach(ext.injectFunction)
 }

@@ -133,7 +133,8 @@ object Dedup {
     * means the shuffle carries 64 longs per doc per task. The tempting
     * one-liner — a lambda over sequence(0,63) re-hashing shingle strings — is
     * ~10× slower because Catalyst inlines the shingle pipeline into all 64
-    * lambda bodies (measured via tools.DedupProfile: 20s → 2s at sf0.1). */
+    * lambda bodies (measured with a one-off profiling probe: 20s → 2s at
+    * sf0.1). */
   /** One cached table per (session, dir, kind) — repeated query invocations
     * (verify then bench, or a long-lived service) reuse the materialized
     * signatures instead of stacking a fresh unreferenced cache per call, the
@@ -222,7 +223,7 @@ object Dedup {
 
   private[graft] def ensureSigTable(spark: SparkSession, sfDir: String,
     fp: String): String = this.synchronized {
-    val tbl = "minhash_sigs" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tbl = "minhash_sigs" + graft.GraftConf.slug(sfDir)
     graft.StoreFp.ensureTable(spark, tbl, fp) {
       // 3-shingle rows come from the window-lead gram builder (explode once,
       // lead×2), NOT explode(shingles(...)): the array-lambda form re-splits
@@ -348,7 +349,7 @@ object Dedup {
   }
 
   def ensureCorpusDigests(spark: SparkSession, sfDir: String): String = {
-    val tbl = s"corpus_digests${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}"
+    val tbl = s"corpus_digests${graft.GraftConf.slug(sfDir)}"
     ensureStoreTable(spark, tbl, Tables.fingerprint(sfDir, "documents")) {
       Tables.load(spark, sfDir, "documents")
         .filter(col("doc_id") % 10 =!= 9)
@@ -401,7 +402,7 @@ object Dedup {
     * clusters owned by exact dedup, same rationale as bandCandidates). */
   private def ensureCorpusSignatureStore(spark: SparkSession, sfDir: String,
     tag: String, corpusPred: Column): (String, String) = {
-    val slug = s"${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}_$tag"
+    val slug = s"${graft.GraftConf.slug(sfDir)}_$tag"
     val fp = Tables.fingerprint(sfDir, "documents")
     val sigTbl = ensureStoreTable(spark, s"corpus_sigs$slug", fp) {
       sigsOf(PipelineOps.gramSet(

@@ -158,7 +158,7 @@ object Joins {
     * JoinsSpec pins the plan: both scans select 8/8 buckets and at most the
     * final aggregation exchanges. */
   def qBucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val slug = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val slug = graft.GraftConf.slug(sfDir)
     val oTbl = s"orders_bkt$slug"
     val cTbl = s"customer_bkt$slug"
     // A table directory left by a previous session is unknown to this

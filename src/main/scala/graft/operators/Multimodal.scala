@@ -502,7 +502,7 @@ object Multimodal {
   private[graft] def ensureMediaHashTable(spark: SparkSession, sfDir: String,
     fp: String): String = this.synchronized {
     import spark.implicits._
-    val tbl = "media_hashes" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tbl = "media_hashes" + graft.GraftConf.slug(sfDir)
     graft.StoreFp.ensureTable(spark, tbl, fp) {
       syntheticMediaTable(spark, sfDir, "image",
           gradPngBytes(gradClassCount(spark, sfDir)))
@@ -745,7 +745,7 @@ object Multimodal {
   private[graft] def ensureWavHashTable(spark: SparkSession, sfDir: String,
     fp: String): String = this.synchronized {
     import spark.implicits._
-    val tbl = "wav_hashes" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tbl = "wav_hashes" + graft.GraftConf.slug(sfDir)
     graft.StoreFp.ensureTable(spark, tbl, fp) {
       syntheticMediaTable(spark, sfDir, "audio",
           wavGradBytes(gradClassCount(spark, sfDir)))

@@ -1,10 +1,15 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType, StructType}
 
 import graft.Tables
-import graft.edfs.{ColPartial, GraftCatalog, HashPartition, RangePartition}
+import graft.edfs.{ColPartial, GraftCatalog, HashPartition, PartitionScheme, Partials,
+  RangePartition}
 
 /** Partition-based Map-Reduce (PMR) analytics + the EDFS storage queries —
   * SURVEY §2A. Mirrors the reference's getAvg/getMin/getMax
@@ -13,18 +18,20 @@ import graft.edfs.{ColPartial, GraftCatalog, HashPartition, RangePartition}
   * (fs_commands.py:396,:429; proj-firebase-flask.py:637,:671).
   *
   * The reference maps each partition to a partial and reduces the partials
-  * on the driver. Here the map runs at WRITE time: every GraftCatalog write
-  * that commits rows records, per partition directory, the partial of each
-  * primitive numeric column (row/non-null/NaN counts, min/max, exact
-  * `decimal(12,2)` sum) in the table's sidecar, computed inside the write
-  * job itself. `statMin`/`statMax`/`statAvg` over a plain `cat` or
-  * `readPartition` — the `hash=` pruning is a filter on the partition column
-  * — then only reduce: the relation's own file index prunes the
-  * directories, every selected directory's listed files must equal the ones
-  * its partial covers, and the answer is a one-row local relation that
-  * launches no job. Any other input, or any mismatch (crash residue, a
-  * foreign table, a snapshot read, a value the decimal cast refuses), falls
-  * back to the same statistic declared as one Spark aggregate.
+  * on the driver. Here the map (`edfs.Partials`) runs at WRITE time: every
+  * GraftCatalog write that commits rows records, per partition directory,
+  * the partial of each primitive numeric column (row/non-null/NaN counts,
+  * min/max, exact `decimal(12,2)` sum) in the table's sidecar, computed
+  * inside the write job itself. `statMin`/`statMax`/`statAvg` over a plain
+  * `cat` or `readPartition` — the `hash=` pruning is a filter on the
+  * partition column — then only reduce (`ColPartial.+`, `Stat.reduce`) the
+  * partials [[GraftCatalog.dirPartials]] gives for the directories the
+  * scan selects: recorded ones for clean directories, one job's worth for
+  * the rest (crash residue, a foreign file). `pmrExplain` renders the same
+  * partials and `pmrCombinePartials` is `statAvg`. Any other input (a
+  * foreign or replicated table, a snapshot read, a sidecar without
+  * partials), or a sum the decimal cast refuses, falls back to the same
+  * statistic declared as one Spark aggregate.
   */
 object Pmr {
 
@@ -33,33 +40,29 @@ object Pmr {
   /** Root for all catalog-backed tables; keyed by scale-factor dir so sf0.01
     * verify runs and sf0.1 bench runs never collide. */
   def catalogRoot(sfDir: String): String =
-    s"${graft.GraftConf.localRoot}/graft_edfs/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}"
+    s"${graft.GraftConf.localRoot}/graft_edfs/${graft.GraftConf.slug(sfDir)}"
 
   def catalog(spark: SparkSession, sfDir: String): GraftCatalog =
     new GraftCatalog(spark, catalogRoot(sfDir))
 
-  /** Write customer hash-partitioned by nation once per JVM/scale (idempotent;
+  /** Write `table` under `warehouse/<name>` once per scale (idempotent;
     * every PMR query runs against the partitioned layout, like the reference
     * always reads EDFS blocks). */
-  def ensureCustomerByNation(spark: SparkSession, sfDir: String): GraftCatalog = {
+  private def ensure(spark: SparkSession, sfDir: String, table: String, name: String,
+    scheme: PartitionScheme): GraftCatalog = {
     val cat = catalog(spark, sfDir)
-    if (!cat.exists("warehouse/customer_by_nation")) {
+    if (!cat.exists(s"warehouse/$name")) {
       cat.mkdir("warehouse")
-      cat.put(Tables.load(spark, sfDir, "customer"),
-        "warehouse/customer_by_nation", HashPartition("c_nationkey"))
+      cat.put(Tables.load(spark, sfDir, table), s"warehouse/$name", scheme)
     }
     cat
   }
 
-  def ensureOrdersByPriceRange(spark: SparkSession, sfDir: String): GraftCatalog = {
-    val cat = catalog(spark, sfDir)
-    if (!cat.exists("warehouse/orders_by_price")) {
-      cat.mkdir("warehouse")
-      cat.put(Tables.load(spark, sfDir, "orders"),
-        "warehouse/orders_by_price", RangePartition("o_totalprice", 8))
-    }
-    cat
-  }
+  def ensureCustomerByNation(spark: SparkSession, sfDir: String): GraftCatalog =
+    ensure(spark, sfDir, "customer", "customer_by_nation", HashPartition("c_nationkey"))
+
+  def ensureOrdersByPriceRange(spark: SparkSession, sfDir: String): GraftCatalog =
+    ensure(spark, sfDir, "orders", "orders_by_price", RangePartition("o_totalprice", 8))
 
   // ----- A1-A6: EDFS storage surface -----
 
@@ -101,18 +104,12 @@ object Pmr {
       |FROM orders ORDER BY o_orderkey""".stripMargin
 
   /** A3 — cat: reassemble a partitioned table in key order. */
-  def edfsCat(spark: SparkSession, sfDir: String): DataFrame = {
-    val cat = catalog(spark, sfDir)
-    if (!cat.exists("warehouse/part_by_brand")) {
-      cat.mkdir("warehouse")
-      cat.put(Tables.load(spark, sfDir, "part"),
-        "warehouse/part_by_brand", HashPartition("p_brand"))
-    }
-    cat.cat("warehouse/part_by_brand")
+  def edfsCat(spark: SparkSession, sfDir: String): DataFrame =
+    ensure(spark, sfDir, "part", "part_by_brand", HashPartition("p_brand"))
+      .cat("warehouse/part_by_brand")
       .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_type"),
         col("p_size"), col("p_retailprice"))
       .orderBy(col("p_partkey"))
-  }
 
   val edfsCatSql: String =
     """SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
@@ -325,12 +322,12 @@ object Pmr {
       lit(Double.PositiveInfinity)))
   private def refMaxExpr(v: Column): Column =
     max(coalesce(nanvl(v, lit(0.0)), lit(0.0)))
-  /** (mean, n) under pandas NaN-skip; the when() guard keeps NaN away from
-    * the ANSI decimal cast, and the sum stays decimal-exact
-    * (order-independent) like the default path. */
-  private def refAvgExprs(v: Column): (Column, Column) = {
-    val clean = when(v.isNotNull && !isnan(v), v)
-    ((sum(dec2(clean)).cast("double") / count(clean)), count(clean))
+  /** (mean, n) with a decimal-exact (order-independent) sum. referenceNan:
+    * pandas NaN-skip, the when() guard keeping NaN away from the ANSI
+    * decimal cast. */
+  private def avgExprs(v: Column, referenceNan: Boolean): (Column, Column) = {
+    val x = if (referenceNan) when(v.isNotNull && !isnan(v), v) else v
+    (sum(dec2(x)).cast("double") / count(x), count(x))
   }
 
   /** The three reductions, each as the scan aggregate and as the reduce of
@@ -377,12 +374,10 @@ object Pmr {
   }
 
   private[graft] case object Avg extends Stat {
-    def scan(v: Column, referenceNan: Boolean): Seq[Column] =
-      if (referenceNan) {
-        val (avg, n) = refAvgExprs(v)
-        Seq(avg.as("avg_val"), n.as("n"))
-      } else
-        Seq((sum(dec2(v)).cast("double") / count(v)).as("avg_val"), count(v).as("n"))
+    def scan(v: Column, referenceNan: Boolean): Seq[Column] = {
+      val (avg, n) = avgExprs(v, referenceNan)
+      Seq(avg.as("avg_val"), n.as("n"))
+    }
     def reduce(rows: Long, p: ColPartial, referenceNan: Boolean): Option[(Any, Long)] = {
       // default mode casts every non-null value: a NaN fails the ANSI cast
       val n = if (referenceNan) p.nonNull - p.nan else p.nonNull
@@ -394,7 +389,7 @@ object Pmr {
 
   private def asDouble(v: Any): Double = v.asInstanceOf[Number].doubleValue
   private def nanOf(p: ColPartial): Any =
-    if (p.dataType == org.apache.spark.sql.types.FloatType) Float.NaN else Double.NaN
+    if (p.dataType == FloatType) Float.NaN else Double.NaN
 
   /** The statistic as one Spark aggregate over `df` — the path every input
     * that cannot be served from write-time partials takes. */
@@ -404,14 +399,15 @@ object Pmr {
     df.agg(cols.head, cols.tail: _*)
   }
 
-  /** The statistic over `df`, reduced on the driver from the write-time
-    * partials when [[GraftCatalog.partialOf]] can prove they cover exactly
-    * `df`'s rows; the result then has the aggregate's exact schema and
-    * launches no job. Otherwise the aggregate itself. */
+  /** The statistic over `df`, reduced on the driver from the per-directory
+    * partials [[GraftCatalog.dirPartials]] gives for exactly `df`'s rows;
+    * the result then has the aggregate's exact schema, and only directories
+    * whose files no partial covers cost a job. Otherwise the aggregate
+    * itself. */
   private def stat(df: DataFrame, c: String, stat: Stat, referenceNan: Boolean): DataFrame = {
     val scan = scanStat(df, c, stat, referenceNan)
-    GraftCatalog.partialOf(df, c)
-      .flatMap { case (rows, p) => stat.reduce(rows, p, referenceNan) }
+    GraftCatalog.dirPartials(df, c)
+      .flatMap(ps => stat.reduce(ps.rows, ps.total, referenceNan))
       .map { case (v, n) =>
         df.sparkSession.createDataFrame(java.util.List.of(Row(v, n)), scan.schema) }
       .getOrElse(scan)
@@ -472,16 +468,26 @@ object Pmr {
       | COUNT(c_acctbal) AS n
       |FROM customer WHERE c_nationkey = 7""".stripMargin
 
-  /** A11 — debug/explain: the per-partition partial aggregates the reference
-    * surfaces with debug=true — here simply the partial-aggregate table keyed by
-    * the partition column. */
+  /** A11 — debug/explain: the per-partition partials the reference surfaces
+    * with debug=true — the same directory partials the stats reduce, one row
+    * per directory holding rows, sorted on the driver (no job when every
+    * directory is clean; a table without partials computes them in one).
+    * As with the per-group `sum(cast(v as decimal(12,2)))`, a directory with
+    * no non-null value has a null sum and a value the cast refuses fails. */
   def pmrExplain(spark: SparkSession, sfDir: String): DataFrame = {
     val cat = ensureCustomerByNation(spark, sfDir)
-    cat.cat("warehouse/customer_by_nation")
-      .groupBy(col("c_nationkey").cast("int").as("partition_key"))
-      .agg(sum(dec2(col("c_acctbal"))).cast("double").as("partial_sum"),
-        count(col("c_acctbal")).as("partial_n"))
-      .orderBy(col("partition_key"))
+    val df = cat.cat("warehouse/customer_by_nation")
+    val ps = GraftCatalog.dirPartials(df, "c_acctbal")
+      .orElse(Partials.compute(df, Some("c_nationkey"), "c_acctbal"))
+      .getOrElse(sys.error("pmr_explain: the partials never arrived"))
+    val rows = ps.dirs.toSeq.collect { case (dir, (n, p)) if n > 0 =>
+      require(p.sum.isDefined && p.nan == 0, s"pmr_explain: a value in $dir fails the decimal cast")
+      val v = ExternalCatalogUtils.unescapePathName(dir.substring(dir.indexOf('=') + 1))
+      Row(if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else Int.box(v.toInt),
+        if (p.nonNull == 0) null else p.sum.get.doubleValue, p.nonNull)
+    }.sortBy(r => Option(r.get(0)).map(_.asInstanceOf[Int]))
+    spark.createDataFrame(rows.asJava, new StructType().add("partition_key", IntegerType)
+      .add("partial_sum", DoubleType).add("partial_n", LongType, nullable = false))
   }
 
   val pmrExplainSql: String =
@@ -503,25 +509,16 @@ object Pmr {
       | CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / COUNT(o_totalprice) AS value
       |FROM orders""".stripMargin
 
-  /** A13 — the reference's two-level reduce made explicit: per-partition
-    * partials (exact cent sums + counts) merged by a typed Aggregator
-    * (functions.PartialCombine ≡ combineAverages, combined_flask.py:762).
-    * The oracle is the plain global mean — proving the partial/merge path is
-    * exactly equivalent. */
+  /** A13 — the reference's two-level reduce made explicit (≡ combineAverages,
+    * combined_flask.py:762): `statAvg` combines the per-partition partials
+    * (exact decimal sums + counts), which keeps the merge exact and
+    * order-independent where the weighted (mean, n) form is not. The oracle
+    * is the global mean over integer cents, which the decimal sum over n
+    * reproduces bit for bit. */
   def pmrCombinePartials(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.functions.PartialCombine
     val cat = ensureCustomerByNation(spark, sfDir)
-    val partials = cat.cat("warehouse/customer_by_nation")
-      .groupBy(col("c_nationkey"))
-      .agg(sum(round(col("c_acctbal") * 100).cast("long")).as("sumCents"),
-        count(lit(1)).as("n"))
-      .select(col("sumCents"), col("n"))
-      .as[PartialCombine.Partial]
-    partials.select(
-        PartialCombine.weightedMean.toColumn.name("avg_val"))
-      .withColumn("stat", lit("combined_partial_mean"))
-      .select(col("stat"), col("avg_val"))
+    statAvg(cat.cat("warehouse/customer_by_nation"), "c_acctbal")
+      .select(lit("combined_partial_mean").as("stat"), col("avg_val"))
   }
 
   val pmrCombinePartialsSql: String =
@@ -594,7 +591,7 @@ object Pmr {
     // all four outputs in ONE aggregation pass (same expressions the statX
     // entry points use) — not three scans glued by cross joins
     val v = col("v")
-    val (avg, n) = refAvgExprs(v)
+    val (avg, n) = avgExprs(v, referenceNan = true)
     d.agg(refMinExpr(v).as("min_val"), refMaxExpr(v).as("max_val"),
       avg.as("avg_val"), n.as("n"))
   }

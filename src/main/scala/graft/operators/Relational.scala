@@ -743,7 +743,7 @@ object Relational {
     * oracle hash — is exact in both engines with no float averaging. */
   def qCorrelatedSubquery(spark: SparkSession, sfDir: String): DataFrame = {
     // per-dir view name: concurrent callers over different dirs never race
-    val view = "b20_orders_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val view = "b20_orders_" + graft.GraftConf.slug(sfDir)
     Tables.load(spark, sfDir, "orders").createOrReplaceTempView(view)
     spark.sql(
       s"""SELECT o_custkey, COUNT(*) AS n_above

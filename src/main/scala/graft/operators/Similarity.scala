@@ -197,7 +197,7 @@ object Similarity {
     sfDir: String): (String, Array[(Int, Array[Double])]) = this.synchronized {
     val (path, codebook) = ensureIvfIndexWithCodebook(spark, sfDir)
     val fp = ivfFpTag(spark, sfDir)
-    val tbl = "ivf_bkt" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tbl = "ivf_bkt" + graft.GraftConf.slug(sfDir)
     ivfBucketedBuilt.get(sfDir) match {
       case Some((f, t)) if f == fp && spark.catalog.tableExists(t) =>
         (t, codebook)
@@ -331,7 +331,7 @@ object Similarity {
     // K rides the fingerprint (the caller picks WHICH codebook's tag): a
     // graph scored under one IVF sizing must never be served to a session
     // whose policy trains another
-    val tbl = s"knn_graph_$variant" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    val tbl = s"knn_graph_$variant" + graft.GraftConf.slug(sfDir)
     graphBuilt.get((sfDir, variant)) match {
       case Some((f, t)) if f == fp && spark.catalog.tableExists(t) => t
       case _ =>
@@ -1379,7 +1379,7 @@ object Similarity {
   // ----- trained-model persistence (StoreFp model blobs, r14 dir. #2) -----
 
   private def dirSlug(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+    graft.GraftConf.slug(sfDir)
 
   /** Codebook <-> model-line codecs: one line per centroid, space-separated
     * `cid v0 … v63` — Double.toString round-trips bit-exactly, so an
@@ -1681,7 +1681,7 @@ object Similarity {
     // same coarse lock as trainCodebook (reentrant, so the nested call is
     // fine): two concurrent builders would race overwrite writes on one path
     val fp = ivfFpTag(spark, sfDir)
-    val path = s"${graft.GraftConf.localRoot}/graft_ivf/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}"
+    val path = s"${graft.GraftConf.localRoot}/graft_ivf/${graft.GraftConf.slug(sfDir)}"
     // rebuild when the index is missing OR the source data changed under the
     // dir since this session built it (same staleness rule as the codebook);
     // overwrite mode makes the rebuild safe
@@ -1795,7 +1795,7 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[String, (String, Array[(Int, Array[Double])])]
 
   private def ivfAppendPath(sfDir: String): String =
-    s"${graft.GraftConf.localRoot}/graft_ivf_inc/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}"
+    s"${graft.GraftConf.localRoot}/graft_ivf_inc/${graft.GraftConf.slug(sfDir)}"
 
   /** The corpus-only codebook (vec_id % 10 != 9 — the same ingest split as
     * C16): trained on yesterday's corpus; the new batch must NOT influence
@@ -1891,7 +1891,7 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   private[graft] def streamIvfBasePath(sfDir: String): String =
-    s"${graft.GraftConf.localRoot}/graft_ivf_streambase/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}"
+    s"${graft.GraftConf.localRoot}/graft_ivf_streambase/${graft.GraftConf.slug(sfDir)}"
 
   /** Build-or-reuse the corpus-only cid-partitioned layout for the streaming
     * append tier (same corpus split and FROZEN codebook as C7d's offline
@@ -2229,7 +2229,7 @@ object Similarity {
       val (path, codebook) = ensureIvfIndexWithCodebook(spark, sfDir)
       val books = trainPqCodebooks(spark, sfDir)
       val fp = ivfFpTag(spark, sfDir)
-      val tbl = "pq_bkt" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val tbl = "pq_bkt" + graft.GraftConf.slug(sfDir)
       pqBucketedBuilt.get(sfDir) match {
         case Some((f, t)) if f == fp && spark.catalog.tableExists(t) =>
           (t, codebook, books)
@@ -2265,7 +2265,7 @@ object Similarity {
     this.synchronized {
       val (path, _) = ensureIvfIndexWithCodebook(spark, sfDir)
       val fp = graft.Tables.fingerprint(sfDir, "embeddings")
-      val tbl = "vec_bkt" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val tbl = "vec_bkt" + graft.GraftConf.slug(sfDir)
       vecBucketedBuilt.get(sfDir) match {
         case Some((f, t)) if f == fp && spark.catalog.tableExists(t) => t
         case _ =>

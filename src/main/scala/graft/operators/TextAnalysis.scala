@@ -404,7 +404,7 @@ object TextAnalysis {
           // newline-joined `count<SP>gram` lines (newline-free by
           // lmModelFrom's require), so the line codec is the identity —
           // one persisted model per blob, adoption bit-equal to a retrain
-          val slug = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+          val slug = graft.GraftConf.slug(sfDir)
           def ensure(kind: String)(train: => String): String =
             graft.StoreFp.ensureModel(s"lm_$kind$slug", fp) {
               train.split('\n').toSeq
@@ -776,7 +776,7 @@ object TextAnalysis {
     bpeMergesCache.get(sfDir).filter(_._1 == tag).map(_._2).getOrElse(this.synchronized {
       bpeMergesCache.get(sfDir).filter(_._1 == tag).map(_._2).getOrElse {
         val lines = graft.StoreFp.ensureModel(
-          "bpe_merges" + sfDir.replaceAll("[^A-Za-z0-9]+", "_"), tag) {
+          "bpe_merges" + graft.GraftConf.slug(sfDir), tag) {
           trainBpeUncached(spark, sfDir).map { case (rk, l, r, c) => s"$rk $l $r $c" }
         }
         val merges = lines.map { ln =>
@@ -937,7 +937,7 @@ object TextAnalysis {
     clfCache.get(sfDir).filter(_._1 == tag).map(_._2).getOrElse(this.synchronized {
       clfCache.get(sfDir).filter(_._1 == tag).map(_._2).getOrElse {
         val lines = graft.StoreFp.ensureModel(
-          "clf_weights" + sfDir.replaceAll("[^A-Za-z0-9]+", "_"), tag) {
+          "clf_weights" + graft.GraftConf.slug(sfDir), tag) {
           trainClfUncached(spark, sfDir).zipWithIndex
             .map { case (wt, b) => s"$b $wt" }
         }

@@ -58,7 +58,7 @@ object Streams extends Serializable {
     * diverge on layout or sanitization and silently restage inside a timed
     * run. */
   private def embBatchStageDir(sfDir: String): java.io.File = new java.io.File(
-    s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/emb_batch_in")
+    s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/emb_batch_in")
 
   /** Stage a testdata table into a stream landing dir, re-copying when the
     * SOURCE's fingerprint no longer matches the one recorded at copy time —
@@ -192,7 +192,7 @@ object Streams extends Serializable {
     * operator to advance the watermark, so the filter has to come after it. */
   private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stageDir = new java.io.File(
-      s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/in")
+      s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/in")
     // staging owns the sentinel: a fresh dir implies a committed sentinel
     // (sentinel existence is part of the freshness check, and restages
     // rewrite it before the fingerprint marker commits)
@@ -242,13 +242,13 @@ object Streams extends Serializable {
     * so there is no watermark to advance. */
   private def docsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stageDir = new java.io.File(
-      s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/docs_in")
+      s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/docs_in")
     stageCopy(sfDir, "documents", stageDir)
     spark.readStream.schema(DocsSchema).parquet(stageDir.getAbsolutePath)
   }
 
   private[graft] def checkpointDir(sfDir: String, name: String): String =
-    s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/$name"
+    s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/$name"
 
   /** Run a streaming DataFrame to completion (AvailableNow) into an in-memory
     * sink and return the sink's contents. */
@@ -1541,7 +1541,7 @@ object Streams extends Serializable {
     * into — the media leg of the continuous ingest path. */
   private def mediaStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stageDir = new java.io.File(
-      s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/media_in")
+      s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/media_in")
     stageMedia(spark, sfDir, stageDir)
     spark.readStream.schema(MediaSchema).parquet(stageDir.getAbsolutePath)
   }
@@ -1655,7 +1655,7 @@ object Streams extends Serializable {
     * (the landing directory an embedding service writes to). */
   private def embeddingsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val stageDir = new java.io.File(
-      s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/emb_in")
+      s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/emb_in")
     stageCopy(sfDir, "embeddings", stageDir)
     spark.readStream.schema(EmbSchema).parquet(stageDir.getAbsolutePath)
   }
@@ -2051,7 +2051,7 @@ object Streams extends Serializable {
 
   /** The landing dir for the D20 training-vector backlog. */
   private def decontamVecStageDir(sfDir: String): java.io.File = new java.io.File(
-    s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/dsem_in")
+    s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/dsem_in")
 
   /** Stage the training-side vectors (everything outside the CAPPED bench
     * slice — C55's split, single-sourced via Similarity.decontamBench: the
@@ -2078,7 +2078,7 @@ object Streams extends Serializable {
   /** The landing dir for the D19 query backlog — one definition, shared by
     * warmup staging and the query (the embBatchStageDir rule). */
   private def knnQueryStageDir(sfDir: String): java.io.File = new java.io.File(
-    s"${graft.GraftConf.localRoot}/graft_stream/${sfDir.replaceAll("[^A-Za-z0-9]+", "_")}/knnq_in")
+    s"${graft.GraftConf.localRoot}/graft_stream/${graft.GraftConf.slug(sfDir)}/knnq_in")
 
   /** Stage the C38 graded query slice (vec_id % 97 == 7) as 3 flat parquet
     * files under the landing dir, fingerprint-committed like every staged

@@ -13,11 +13,11 @@ class CatalogSpec extends SparkSpec {
     new GraftCatalog(spark, root, format, maxRecordsPerFile)
   }
 
-  /** Rewrites the `_graft.json` of `table` (root-relative) through a JSON
-    * edit of its root object, bypassing the catalog. */
-  private def editSidecar(table: String)(
+  /** Rewrites the `_graft.json` of `table` (relative to `base`) through a
+    * JSON edit of its root object, bypassing the catalog. */
+  private def editSidecar(table: String, base: String = s"${GraftConf.localRoot}/test_edfs")(
     edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
-    val m = new java.io.File(s"${GraftConf.localRoot}/test_edfs/$table/_graft.json")
+    val m = new java.io.File(s"$base/$table/_graft.json")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(m).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     edit(root)
@@ -584,9 +584,11 @@ class CatalogSpec extends SparkSpec {
     val cleanRow = clean.head()
     assert(cleanRow == dirRead(cat.cat("t")) && cleanRow.getLong(1) == src.count())
     cat.plantCrashResidue("t")
-    val dirty = Pmr.statAvg(cat.cat("t"), "n_nationkey")
-    assert(!served(dirty), "residue must force the aggregate")
+    // the residue's directories are recomputed in one job; the rest reduce
+    val (dirty, jobs) = jobsDuring(Pmr.statAvg(cat.cat("t"), "n_nationkey"))
+    assert(served(dirty) && jobs == 1, s"residue must cost one job, ran $jobs")
     val dirtyRow = dirty.head()
+    assert(bits(dirtyRow) == bits(Pmr.scanStat(cat.cat("t"), "n_nationkey", Pmr.Avg, false).head()))
     assert(dirtyRow == dirRead(cat.cat("t")) && dirtyRow.getLong(1) > src.count(),
       s"orphan rows must count as the directory read counts them: $dirtyRow")
     cat.vacuum("t")
@@ -615,6 +617,75 @@ class CatalogSpec extends SparkSpec {
     cat.putReplicated(src, "r", HashPartition("n_regionkey"))
     val rep = Pmr.statMax(cat.catReplicated("r"), "n_nationkey")
     assert(!served(rep) && rep.head() == want)
+  }
+
+  test("residue in 1 of k directories costs one job that reads only that directory") {
+    import graft.operators.Pmr
+    val cat = freshCatalog("partials_dirty_one")
+    val src = Tables.load(spark, sfDir, "customer")
+    cat.put(src, "t", HashPartition("c_nationkey"))
+    cat.append(src.filter(col("c_custkey") % 3 === 0), "t")
+    // a dead writer's file, promoted into one partition directory only
+    val dir = new java.io.File(s"${GraftConf.localRoot}/test_edfs/partials_dirty_one/t/c_nationkey=7")
+    val first = dir.listFiles().filter(_.getName.startsWith("part-")).minBy(_.getName)
+    java.nio.file.Files.copy(first.toPath, new java.io.File(dir, "part-00999-orphan.parquet").toPath)
+    val dirtyFiles = dir.listFiles().filter(_.getName.startsWith("part-"))
+      .map(_.getCanonicalPath).toSet
+    val k = cat.partitionLocations("t").count()
+    assert(k > 1)
+    // the input files of every query the session runs
+    val read = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+        d: Long): Unit = read.add(qe.optimizedPlan.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+        }.collect { case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          h.location.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath)
+        }.flatten.toSet)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+        e: Exception): Unit = ()
+    }
+    for ((s, ref) <- Seq((Pmr.Avg, false), (Pmr.Min, false), (Pmr.Max, false),
+        (Pmr.Avg, true), (Pmr.Min, true), (Pmr.Max, true))) {
+      val f = s match {
+        case Pmr.Avg => Pmr.statAvg _
+        case Pmr.Min => Pmr.statMin _
+        case _ => Pmr.statMax _
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext) // the last check's query
+      read.clear()
+      spark.listenerManager.register(listener)
+      val (got, jobs) = try jobsDuring(f(cat.cat("t"), "c_acctbal", ref))
+        finally spark.listenerManager.unregister(listener)
+      assert(served(got) && jobs == 1, s"$s ref=$ref: $jobs job(s)")
+      assert(read.size == 1 && read.peek() == dirtyFiles, s"$s ref=$ref read $read")
+      assert(bits(got.head()) == bits(Pmr.scanStat(cat.cat("t"), "c_acctbal", s, ref).head()),
+        s"$s ref=$ref")
+    }
+  }
+
+  test("pmr_explain renders the clean partials with no job, as the group-by did") {
+    import graft.operators.Pmr
+    Pmr.edfsPutHash(spark, sfDir) // a fresh put, so the table carries partials
+    val (got, jobs) = jobsDuring(Pmr.pmrExplain(spark, sfDir).collect())
+    assert(jobs == 0, s"pmr_explain ran $jobs job(s)")
+    val want = Pmr.catalog(spark, sfDir).cat("warehouse/customer_by_nation")
+      .groupBy(col("c_nationkey").cast("int").as("partition_key"))
+      .agg(sum(col("c_acctbal").cast("decimal(12,2)")).cast("double").as("partial_sum"),
+        count(col("c_acctbal")).as("partial_n"))
+      .orderBy(col("partition_key")).collect()
+    assert(got.nonEmpty && got.map(bits).toSeq == want.map(bits).toSeq)
+    // a table written before partials computes them in one job
+    editSidecar("warehouse/customer_by_nation", Pmr.catalogRoot(sfDir))(_.remove("partials"))
+    val (legacy, legacyJobs) = jobsDuring(Pmr.pmrExplain(spark, sfDir).collect())
+    assert(legacyJobs == 1 && legacy.map(bits).toSeq == want.map(bits).toSeq)
+    Pmr.edfsPutHash(spark, sfDir)
+  }
+
+  /** Row values with doubles by their bits. */
+  private def bits(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case v => v
   }
 
   private def served(df: org.apache.spark.sql.DataFrame): Boolean =

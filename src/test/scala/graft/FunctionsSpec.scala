@@ -263,6 +263,20 @@ class FunctionsSpec extends SparkSpec {
     assert(err.getMessage.contains("LITERAL"))
   }
 
+  test("a new session of a GraftConf session knows every graft function") {
+    val names = Seq("graft_cosine", "graft_nearest_cid", "graft_nearest_cid_bc",
+      "graft_nearest_cids_bc", "graft_sig_agreement", "graft_might_contain",
+      "graft_fingerprint", "graft_token_weight", "graft_ntz_utc", "graft_stop_hits",
+      "graft_distinct_bigrams", "graft_gram_set", "graft_gopher_stats", "graft_bpe_count",
+      "graft_bpe_merge_count", "graft_top_gram", "graft_gram_hits", "graft_gram_marks",
+      "graft_pq_codes", "graft_adc_table", "graft_minhash_sig", "graft_lm_score",
+      "graft_lm_score_bc")
+    // the extensions alone: no Column-API call has registered anything here
+    val fresh = spark.newSession()
+    assert(names.filterNot(fresh.catalog.functionExists) == Nil)
+    assert(GraftFunctions.All.map(_._1.funcName).sorted == names.sorted)
+  }
+
   test("graft_cosine is callable from SQL after registration") {
     import spark.implicits._
     GraftFunctions.ensureRegistered(spark)

@@ -132,11 +132,12 @@ class PartialsSpec extends SparkSpec {
         case 2 => cat.put(next(rnd.nextInt(3) * 20), "t", scheme); "put"
         case 3 => cat.compact("t"); "compact"
         case 4 =>
-          // residue: every stat must fall back to the aggregate (CatalogSpec
-          // pins its answer, orphan rows included); vacuum restores serving
+          // residue: its directories are recomputed by one job and every
+          // stat is still served, orphan rows included; vacuum cleans it
           if (cat.cat("t").inputFiles.nonEmpty) {
             cat.plantCrashResidue("t")
-            assert(check(s"$name residue", cat.cat("t"), Clean, mustServe = false) == 0)
+            assert(check(s"$name residue", cat.cat("t"), Clean, mustServe = true) == 12)
+            assert(jobsDuring(Pmr.statAvg(cat.cat("t"), Clean.head))._2 == 1)
           }
           cat.vacuum("t"); cat.expireSnapshots("t", 1); "vacuum"
         case 5 =>

@@ -9,14 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", s"${GraftConf.localRoot}/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftConf(SparkSession.builder().master("local[4]").appName("graft-test"), "4").getOrCreate()
 
   /** `body`'s result and the number of Spark jobs it launched. */
   def jobsDuring[A](body: => A): (A, Int) = {
