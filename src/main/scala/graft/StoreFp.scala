@@ -40,9 +40,9 @@ object StoreFp {
   /** Canonical sidecar file-name suffix — [[invalidateAll]] keys on it. */
   private[graft] val SidecarName = "_graft_store_fp"
 
-  private def warehouseTableDir(spark: SparkSession,
-    tbl: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(GraftConf.warehouseDir(spark), tbl.toLowerCase(java.util.Locale.ROOT))
+  private def warehouseTableDir(spark: SparkSession, tbl: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(GraftConf.warehouseDir(spark),
+      tbl.toLowerCase(java.util.Locale.ROOT))
 
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())

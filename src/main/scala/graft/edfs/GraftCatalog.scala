@@ -1173,7 +1173,7 @@ object GraftCatalog {
     * them. A clean directory, whose listed files (name, length) equal the
     * ones its partial covers, gives that partial; the others (residue, a
     * rewritten file, a column the partial lacks) get theirs from one job
-    * over just their listed files. Nothing is written back. */
+    * over just their directories. Nothing is written back. */
   def dirPartials(df: DataFrame, column: String): Option[ScanPartials] = {
     def scan(p: LogicalPlan, filters: Seq[Expression])
       : Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = p match {
@@ -1220,13 +1220,15 @@ object GraftCatalog {
         val recorded = listed.map { case (d, files) =>
           d -> m.partials.get(d)
             .filter(_.files.filter(_._2 > 0) == files.map(f => f.getPath.getName -> f.getLen).toMap)
-            .flatMap(p => p.cols.get(attr.name).filter(_.dataType == attr.dataType).map(p.rows -> _))
+            .flatMap(p => p.cols.get(attr.name).filter(_.dataType == attr.dataType)
+              .map(p.rows -> _))
         }
         val dirty = recorded.collect { case (d, None) => d }.toSet
         val fresh =
           if (dirty.isEmpty) Some(Map.empty[String, (Long, ColPartial)])
           else if (m.partials.isEmpty) None // written without partials: scanned
-          else Partials.compute(cat.loadData("", Some(dirty.toSeq.flatMap(listed).map(_.getPath))),
+          else Partials.compute(
+            cat.loadData("", Some(dirty.toSeq.map(listed(_).head.getPath.getParent))),
             partCols.headOption, attr.name).map(_.dirs)
             // a directory name the aggregate does not reproduce is no proof
             .filter(_.keySet.subsetOf(dirty))

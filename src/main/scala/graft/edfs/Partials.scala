@@ -375,8 +375,8 @@ object Partials {
   /** The partials of the primitive numeric `column` over the rows of
     * `frame`, one per partition directory of `partCol` that holds a row:
     * the aggregate a write observes, observed over a `noop` write, so it
-    * costs one job (a plain `agg` would add a shuffle stage). None when the
-    * metrics never arrive. */
+    * costs one job (under AQE a plain `agg` runs its shuffle stage as a
+    * second job). None when the metrics never arrive. */
   def compute(frame: DataFrame, partCol: Option[String], column: String): Option[ScanPartials] = {
     val observed = observe(frame, partCol, Seq(column))
     observed.frame.write.format("noop").mode("overwrite").save()

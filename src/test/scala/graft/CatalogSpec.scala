@@ -626,9 +626,10 @@ class CatalogSpec extends SparkSpec {
     cat.put(src, "t", HashPartition("c_nationkey"))
     cat.append(src.filter(col("c_custkey") % 3 === 0), "t")
     // a dead writer's file, promoted into one partition directory only
-    val dir = new java.io.File(s"${GraftConf.localRoot}/test_edfs/partials_dirty_one/t/c_nationkey=7")
+    val dir = new java.io.File(
+      s"${GraftConf.localRoot}/test_edfs/partials_dirty_one/t/c_nationkey=7")
     val first = dir.listFiles().filter(_.getName.startsWith("part-")).minBy(_.getName)
-    java.nio.file.Files.copy(first.toPath, new java.io.File(dir, "part-00999-orphan.parquet").toPath)
+    java.nio.file.Files.copy(first.toPath, new java.io.File(dir, "part-00999-x.parquet").toPath)
     val dirtyFiles = dir.listFiles().filter(_.getName.startsWith("part-"))
       .map(_.getCanonicalPath).toSet
     val k = cat.partitionLocations("t").count()
