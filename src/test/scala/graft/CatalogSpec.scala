@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.edfs.{GraftCatalog, HashPartition, RangePartition, BucketedHashPartition, Unpartitioned}
@@ -632,8 +633,7 @@ class CatalogSpec extends SparkSpec {
     java.nio.file.Files.copy(first.toPath, new java.io.File(dir, "part-00999-x.parquet").toPath)
     val dirtyFiles = dir.listFiles().filter(_.getName.startsWith("part-"))
       .map(_.getCanonicalPath).toSet
-    val k = cat.partitionLocations("t").count()
-    assert(k > 1)
+    assert(cat.partitionLocations("t").count() > 1)
     // the input files of every query the session runs
     val read = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -646,13 +646,9 @@ class CatalogSpec extends SparkSpec {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
         e: Exception): Unit = ()
     }
-    for ((s, ref) <- Seq((Pmr.Avg, false), (Pmr.Min, false), (Pmr.Max, false),
-        (Pmr.Avg, true), (Pmr.Min, true), (Pmr.Max, true))) {
-      val f = s match {
-        case Pmr.Avg => Pmr.statAvg _
-        case Pmr.Min => Pmr.statMin _
-        case _ => Pmr.statMax _
-      }
+    val stats: Seq[((DataFrame, String, Boolean) => DataFrame, Pmr.Stat)] =
+      Seq((Pmr.statAvg _, Pmr.Avg), (Pmr.statMin _, Pmr.Min), (Pmr.statMax _, Pmr.Max))
+    for ((f, s) <- stats; ref <- Seq(false, true)) {
       org.apache.spark.TestBus.drain(spark.sparkContext) // the last check's query
       read.clear()
       spark.listenerManager.register(listener)
