@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. EDFS catalog tables are pre-created before timing so
   * PMR entries measure query latency; the explicit write benchmarks
@@ -9,9 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    val spark = GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // validate BEFORE the warm-up block — a bad value must fail fast, not
     // minutes into catalog staging

@@ -45,6 +45,14 @@ object GraftConf {
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
+  /** The cores of a local graft session: `SPARK_GRAFT_CPUS`, default 4. */
+  def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** A `local[localCpus]` session builder with graft defaults — the one
+    * session set-up of every entry point. */
+  def local(): SparkSession.Builder =
+    apply(SparkSession.builder().master(s"local[$localCpus]"), localCpus)
+
   /** Apply graft defaults to a session builder. AQE stays ON (runtime
     * coalescing + skew-join splitting are the first line of defense against
     * skew at scale); broadcast threshold is left at Spark's default — the

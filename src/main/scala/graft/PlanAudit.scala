@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan hygiene audit: prints the formatted physical plan of each named query
   * and greps for the scale-critical properties — pushed filters, pruned scan
   * schemas, broadcast joins where a dim is small, whole-stage codegen spans.
@@ -10,8 +8,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
+    val spark = GraftConf.local()
       // audit-only: a static (non-AQE) plan exposes codegen subtrees and the
       // pre-runtime join strategy; production runs keep AQE on
       .config("spark.sql.adaptive.enabled", "false")

@@ -25,9 +25,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    val spark = GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional targeted run (comma-separated query names): iterating one

@@ -2,6 +2,7 @@ package graft.edfs
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,12 +34,20 @@ case object Unpartitioned extends PartitionScheme
   * access goes through the Hadoop FileSystem API so the same code runs on
   * local disk, HDFS, or s3a at any scale.
   *
+  * Every write (put, append, merge, compact, rm inside a table) takes one
+  * path: it lays its rows out by the table's scheme ([[layout]]), writes them
+  * while observing their partials, swaps rewritten directories in
+  * ([[swapIn]]) and ends in [[commit]], the one place that lists the table
+  * and records its snapshot and partials. Writes to one table serialize
+  * within the JVM ([[exclusive]]).
+  *
   * Reference anchors: mkdir combined_flask.py:85, ls :140, rm :214, cat :270,
   * put :324, getPartitionLocations :438, readPartition :492.
   */
 class GraftCatalog(spark: SparkSession, root: String,
   val format: String = "parquet",
   val maxRecordsPerFile: Long = 0) {
+  import GraftCatalog._
 
   require(format == "parquet" || format == "json" || format == "orc" ||
     format == "csv",
@@ -82,39 +91,36 @@ class GraftCatalog(spark: SparkSession, root: String,
     if (rel.isEmpty) new Path(root) else new Path(root, rel)
   }
 
+  /** Runs `body` holding the JVM-wide write lock of the table at `path`,
+    * keyed by its qualified root, so two catalogs over one root share it.
+    * Every write of a table and its maintenance (vacuum, snapshot expiry)
+    * serialize; reads take no lock. Writers in other JVMs are not seen. */
+  private def exclusive[A](path: String)(body: => A): A =
+    WriteLocks.computeIfAbsent(fs.makeQualified(abs(path)).toString, _ => new Object)
+      .synchronized(body)
+
   /** mkdir -p — create a directory chain in the namespace. */
   def mkdir(path: String): Boolean = fs.mkdirs(abs(path))
 
   /** rm — remove a file/dir; like the reference, refuses non-empty directories
-    * unless `recursive`. */
+    * unless `recursive`. A physical delete INSIDE a table commits like a
+    * rewrite of nothing: every snapshot manifest naming the deleted files is
+    * invalid, so history truncates to the current state (same policy as
+    * compact). A deleted TABLE ROOT took its sidecar with it. */
   def rm(path: String, recursive: Boolean = false): Boolean = {
     val p = abs(path)
-    if (!fs.exists(p)) false
-    else if (!recursive && fs.getFileStatus(p).isDirectory &&
-      fs.listStatus(p).nonEmpty && !isTable(path)) false
-    else {
-      val deleted = fs.delete(p, true)
-      // a physical delete INSIDE a tracked table invalidates every snapshot
-      // manifest naming the deleted files — truncate history to the current
-      // state (same policy as compact, which is also a physical rewrite)
-      if (deleted) truncateHistoryOfEnclosingTable(path)
-      deleted
-    }
-  }
-
-  /** Nearest enclosing committed table of a just-deleted subpath, if any:
-    * its snapshot history now names missing files, so reset it to the single
-    * current snapshot. A deleted TABLE ROOT took its sidecar with it and
-    * needs nothing. */
-  private def truncateHistoryOfEnclosingTable(path: String): Unit = {
+    def delete(): Boolean =
+      fs.exists(p) && (recursive || !fs.getFileStatus(p).isDirectory ||
+        fs.listStatus(p).isEmpty || isTable(path)) && fs.delete(p, true)
     val parts = path.split("/").filter(_.nonEmpty)
-    (parts.length - 1 to 1 by -1).map(i => parts.take(i).mkString("/"))
-      .find(isTable)
-      .foreach { t =>
-        readMeta(t).filter(_.versions.nonEmpty).foreach { m =>
-          writeSidecar(t, m.copy(versions = Seq(listLeafFiles(t))))
-        }
+    (parts.length - 1 to 1 by -1).map(i => parts.take(i).mkString("/")).find(isTable) match {
+      case Some(t) => exclusive(t) {
+        val deleted = delete()
+        if (deleted) readMeta(t).foreach(commit(t, _, Rewrote(Set.empty)))
+        deleted
       }
+      case None => delete()
+    }
   }
 
   /** ls — list a namespace directory with the reference's full metadata row
@@ -155,20 +161,11 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   private def isTable(path: String): Boolean = fs.exists(new Path(abs(path), "_SUCCESS"))
 
-  /** Whether this catalog's writes record partials for stat reads. */
-  private def servesPartials: Boolean = Partials.ServedFormats(format)
-
   /** Spark's own rule for what a file index reads: `.`/`_` names are
     * metadata, except `_`-prefixed partition directories such as the
     * internal `__graft_bucket=<n>`. */
   private def isDataName(name: String): Boolean =
     !name.startsWith(".") && (!name.startsWith("_") || name.contains("="))
-
-  /** Table-relative directory of a table-relative file ("" = the root). */
-  private def dirOf(rel: String): String = {
-    val i = rel.lastIndexOf('/')
-    if (i < 0) "" else rel.substring(0, i)
-  }
 
   /** Listed files grouped by directory: dir → (file name → length). */
   private def byDir(leaves: Seq[(String, Long)]): Map[String, Map[String, Long]] =
@@ -176,51 +173,187 @@ class GraftCatalog(spark: SparkSession, root: String,
       d -> fs.map { case (rel, len) => rel.substring(rel.lastIndexOf('/') + 1) -> len }.toMap
     }
 
+  // ----- the write path: layout, observed write, park-and-swap, commit -----
+
+  /** The directory column a scheme partitions on: the user's column for
+    * hash layout, the internal bucket column for bucketed/range, none for
+    * unpartitioned. */
+  private def partitionColumn(scheme: PartitionScheme): Option[String] = scheme match {
+    case Unpartitioned => None
+    case HashPartition(c) => Some(c)
+    case _ => Some(BucketCol)
+  }
+
+  /** The rows of `df` as the table's layout stores them, and the column
+    * they are partitioned on. A range table bins by its recorded `bounds`,
+    * fixed at the first put, so appended batches land in the same bins. */
+  private def layout(df: DataFrame, scheme: PartitionScheme,
+    bounds: (Double, Double)): (DataFrame, Option[String]) = {
+    val frame = scheme match {
+      case Unpartitioned => df
+      case HashPartition(c) => coerceNullKey(df, c)
+      case BucketedHashPartition(c, n) => df.withColumn(BucketCol, pmod(hash(col(c)), lit(n)))
+      case RangePartition(c, n) => df.withColumn(BucketCol, rangeBucket(c, bounds, n))
+    }
+    (frame, partitionColumn(scheme))
+  }
+
+  /** The deterministic equi-width bucket id for a range layout; out-of-range
+    * values clamp to the edge buckets. */
+  private def rangeBucket(c: String, bounds: (Double, Double), n: Int): Column = {
+    val (lo, hi) = bounds
+    val width = (hi - lo) / n
+    val bucket =
+      if (width == 0) lit(0)
+      else greatest(least(floor((col(c).cast("double") - lit(lo)) / lit(width)),
+        lit(n - 1)), lit(0))
+    coalesce(bucket.cast("int"), lit(0))
+  }
+
+  /** Equi-width bins like the reference's pd.cut need `c`'s min and max:
+    * one pass (a metadata-only read when parquet stats suffice). None when
+    * `c` holds no value (an empty or all-null input). */
+  private def rangeBounds(df: DataFrame, c: String): Option[(Double, Double)] = {
+    val b = df.agg(min(col(c).cast("double")), max(col(c).cast("double"))).head()
+    Option.when(!b.isNullAt(0) && !b.isNullAt(1))((b.getDouble(0), b.getDouble(1)))
+  }
+
+  /** `df` routed to one task per value of `c` (so `partitionBy` writes one
+    * file per directory, unless the leaf-file cap splits it), each task's
+    * rows in a fixed order. Without the order a rewrite's bytes would depend
+    * on the order its input files are listed in, which varies with their
+    * random part-file names. */
+  private def ordered(df: DataFrame, c: String): DataFrame =
+    df.repartition(col(c)).sortWithinPartitions((c +: df.schema.fields.toSeq
+      .filter(f => f.name != c && RowOrdering.isOrderable(f.dataType)).map(_.name)).map(col): _*)
+
+  /** Writes `frame`, partitioned on `partCol`, to `target` with `mode`, and
+    * returns the per-directory partials the write job observed (None when
+    * the format is not served or the metrics never arrived). */
+  private def save(frame: DataFrame, partCol: Option[String], target: Path,
+    mode: String): Option[Map[String, DirPartial]] = {
+    val observed = Partials.observe(frame, partCol, Partials.ServedFormats(format))
+    val w = observed.frame.write
+    capped(partCol.fold(w)(w.partitionBy(_))).mode(mode).format(format).save(target.toString)
+    observed.collect()
+  }
+
+  /** The sibling of a table root that a rewrite stages into (`staged/`)
+    * and parks the replaced data in (`parked/`). A finished swap deletes it,
+    * so one that exists is crash residue for [[vacuum]]. It sits OUTSIDE the
+    * root: a parked `k=v` name inside it would be rediscovered as a
+    * partition after a crash. */
+  private def swapRoot(base: Path): Path = new Path(base.getParent, base.getName + "__swap")
+
+  /** Park-and-swap: moves every data entry of the staged root (a partition
+    * directory, or a data file of an unpartitioned table) into the table,
+    * parking the live entry of that name first, and parks the `retired`
+    * entries too. No point loses both copies of an entry: after a crash
+    * each one is live, parked or still staged, recoverable by rename. The
+    * root and its sidecar are never moved. Returns the installed names. */
+  private def swapIn(base: Path, retired: Seq[String] = Nil): Set[String] = {
+    val staged = new Path(swapRoot(base), "staged")
+    val parked = new Path(swapRoot(base), "parked")
+    val fresh = fs.listStatus(staged).map(_.getPath.getName).filter(isDataName).toSet
+    fs.delete(parked, true)
+    fs.mkdirs(parked)
+    (retired ++ fresh).foreach { n =>
+      val live = new Path(base, n)
+      if (fs.exists(live)) require(fs.rename(live, new Path(parked, n)), s"park $n failed")
+      if (fresh(n)) require(fs.rename(new Path(staged, n), live), s"swap $n failed")
+    }
+    fs.delete(swapRoot(base), true)
+    fresh
+  }
+
+  /** The one commit every write ends in: list the table once, then write
+    * `m` as its sidecar with
+    *  - `versions`: for an append, the recorded history plus the files this
+    *    write added; otherwise the single current snapshot. An untracked
+    *    legacy table stays untracked — starting history mid-life would
+    *    fabricate a v1 that never existed — unless a put replaced it.
+    *  - `partials`: a directory this write rewrote takes the partial it
+    *    observed over the files now listed there; one it appended to takes
+    *    old + observed over the old files plus the added ones (a directory
+    *    new to the table: the observed one); every other directory keeps
+    *    its partial. A directory missing either side gets none and is
+    *    never served. Files on disk that no commit wrote (a dead writer's
+    *    residue) stay out of every manifest and partial, so vacuum still
+    *    sees them as orphans. */
+  private def commit(path: String, m: Sidecar, change: Change,
+    observed: Option[Map[String, DirPartial]] = None): Unit = {
+    val leaves = listLeaves(path)
+    val (delta, existed) = change match {
+      case Appended(before) => (leaves.filterNot(before.toSet), byDir(before).keySet)
+      case _ => (Nil, Set.empty[String])
+    }
+    val now = byDir(leaves)
+    val added = byDir(delta)
+    val appendedTo = change match {
+      case Appended(_) => added.keySet ++ observed.fold(Set.empty[String])(_.filter(_._2.rows > 0).keySet)
+      case _ => Set.empty[String]
+    }
+    val rewrote: String => Boolean = change match {
+      case Replaced => _ => true
+      case Rewrote(dirs) => dirs
+      case Appended(_) => _ => false
+    }
+    def seen(d: String) = observed.flatMap(_.get(d))
+    val partials = (m.partials.keySet ++ now.keySet).flatMap { d =>
+      val partial =
+        if (appendedTo(d)) for {
+          b <- seen(d)
+          files <- added.get(d)
+          fresh = b.copy(files = files)
+          p <- if (existed(d)) m.partials.get(d).map(_ + fresh) else Some(fresh)
+        } yield p
+        else if (rewrote(d)) for (b <- seen(d); files <- now.get(d)) yield b.copy(files = files)
+        else m.partials.get(d)
+      partial.map(d -> _)
+    }.toMap
+    val versions = change match {
+      case _ if m.versions.isEmpty && change != Replaced => Nil
+      case Appended(_) => m.versions :+ delta.map(_._1)
+      case _ => Seq(leaves.map(_._1))
+    }
+    writeSidecar(path, m.copy(versions = versions, partials = partials))
+  }
+
+  /** A table's sidecar and scheme, for a write that must reproduce its
+    * layout. Refuses rather than guess: a defaulted scheme writing flat
+    * files into a partitioned table would corrupt partition discovery for
+    * the whole table. */
+  private def writable(path: String, op: String): (Sidecar, PartitionScheme) = {
+    require(isTable(path), s"$op target $path is not a committed table")
+    val m = readMeta(path)
+    require(m.isDefined, s"$op: no sidecar at $path")
+    val scheme = m.get.scheme
+    require(scheme.isDefined,
+      s"$op: sidecar at $path has no recoverable scheme — refusing to guess the layout")
+    (m.get, scheme.get)
+  }
+
   /** put — ingest a DataFrame as a partitioned parquet table. The partition
     * column layout gives readPartition/pruned-PMR their pruning for free.
     * A `_graft.json` sidecar records schema + scheme + permissions — the
     * namenode-metadata analog (reference keeps these in the Namenode table /
     * Firebase inodes). */
-  def put(df: DataFrame, path: String, scheme: PartitionScheme): Unit = {
-    val target = abs(path).toString
+  def put(df: DataFrame, path: String, scheme: PartitionScheme): Unit = exclusive(path) {
     // splittability metadata is decided BEFORE the write so the sidecar lands
     // with the data; non-csv formats skip the scan entirely
     val embeddedNl = format == "csv" && hasEmbeddedNewlines(df)
-    val (frame, partCol, rangeBounds) = scheme match {
-      case Unpartitioned => (df, None, None)
-      case HashPartition(c) => (coerceNullKey(df, c), Some(c), None)
-      case BucketedHashPartition(c, n) =>
-        (df.withColumn(BucketCol, pmod(hash(col(c)), lit(n))), Some(BucketCol), None)
-      case RangePartition(c, n) =>
-        // Equi-width bins like the reference's pd.cut: one extra pass for
-        // min/max (a metadata-only read when parquet stats suffice), then a
-        // deterministic bucket id. The top edge folds into the last bucket.
-        // An empty/all-null column has no range: everything (i.e. nothing, or
-        // the null rows) lands in bucket 0 instead of a MatchError.
-        val bounds = df.agg(min(col(c).cast("double")), max(col(c).cast("double"))).head()
-        val (lo, hi) =
-          if (bounds.isNullAt(0) || bounds.isNullAt(1)) (0.0, 0.0)
-          else (bounds.getDouble(0), bounds.getDouble(1))
-        (df.withColumn(BucketCol, rangeBucket(c, lo, hi, n)), Some(BucketCol), Some((lo, hi)))
+    // an empty/all-null range column has no range: everything (i.e.
+    // nothing, or the null rows) lands in bucket 0
+    val bounds = scheme match {
+      case RangePartition(c, _) => rangeBounds(df, c).getOrElse(NoBounds)
+      case _ => NoBounds
     }
-    val observed = Partials.observe(frame, partCol, servesPartials)
-    val w = observed.frame.write
-    capped(partCol.fold(w)(w.partitionBy(_))).mode("overwrite").format(format).save(target)
-    // after the data write: overwrite mode clears the directory first
-    val leaves = listLeaves(path)
-    writeSidecar(path, toSidecar(df.schema, scheme, rangeBounds, embeddedNl)
-      .copy(versions = Seq(leaves.map(_._1)),
-        partials = withFiles(observed.collect(), byDir(leaves))))
+    val (frame, partCol) = layout(df, scheme, bounds)
+    // overwrite mode clears the directory first
+    val observed = save(frame, partCol, abs(path), "overwrite")
+    commit(path, Sidecar(df.schema, Some(scheme), bounds, "644", format, embeddedNl),
+      Replaced, observed)
   }
-
-  /** Attach each observed directory partial to the files that directory
-    * now holds; a listed directory without a partial gets none (and is
-    * then never served). */
-  private def withFiles(observed: Option[Map[String, DirPartial]],
-    files: Map[String, Map[String, Long]]): Map[String, DirPartial] =
-    observed.fold(Map.empty[String, DirPartial]) { dirs =>
-      files.flatMap { case (d, fs) => dirs.get(d).map(p => d -> p.copy(files = fs)) }
-    }
 
   /** All committed data files of a table, as sorted table-relative paths —
     * the snapshot manifest. One recursive namenode listing per WRITE (reads
@@ -244,56 +377,41 @@ class GraftCatalog(spark: SparkSession, root: String,
     walk(base).sorted
   }
 
-  /** The deterministic equi-width bucket id for a range layout. The bounds
-    * are FIXED at first put and persisted in the sidecar, so appended batches
-    * land in the same bins (out-of-range values clamp to the edge buckets). */
-  private def rangeBucket(c: String, lo: Double, hi: Double, n: Int): Column = {
-    val width = (hi - lo) / n
-    val bucket =
-      if (width == 0) lit(0)
-      else greatest(least(floor((col(c).cast("double") - lit(lo)) / lit(width)),
-        lit(n - 1)), lit(0))
-    coalesce(bucket.cast("int"), lit(0))
-  }
-
   /** append — add a batch to an existing table (the incremental-ingest write
     * path; `put` is the full rewrite). The batch may carry NEW columns —
     * parquet's per-file schema plus a merged-schema read makes that a
     * metadata-only evolution, no rewrite of old files (the property that
     * matters when the table is 100 TB and the schema grows a column). The
     * sidecar schema is refreshed to the union so `cat` of an empty-after-rm
-    * table still knows the full shape. Partition layout must match the
-    * original scheme; the same scheme column is reused. */
-  def append(df: DataFrame, path: String): Unit = {
-    require(isTable(path), s"append target $path is not a committed table")
-    requireCoherentScheme(path, "append")
-    val target = abs(path).toString
-    val meta0 = readMeta(path)
+    * table still knows the full shape. The batch is laid out by the table's
+    * own scheme — written flat into a bucketed table it would corrupt
+    * partition discovery (leaf files at the root next to bucket
+    * directories). */
+  def append(df: DataFrame, path: String): Unit = exclusive(path) {
+    val (recorded, scheme) = writable(path, "append")
     // A range table whose persisted bounds are degenerate (lo == hi: the
     // first put was empty, all-null, or single-valued) would route every
     // appended row to bucket 0 forever — heal it by adopting real bounds from
     // the first batch that has them. Persisted BEFORE the data write so the
     // rows below and all future appends bin identically; the rows already in
     // bucket 0 stay readable (bounds only route writes, never reads).
-    val meta = meta0.map {
-      case m if m.scheme.kind == "range" && m.scheme.lo == m.scheme.hi =>
-        val c = m.scheme.column
-        val b = df.agg(min(col(c).cast("double")), max(col(c).cast("double"))).head()
-        if (!b.isNullAt(0) && !b.isNullAt(1) && b.getDouble(0) != b.getDouble(1)) {
-          val healed = m.copy(scheme =
-            m.scheme.copy(lo = b.getDouble(0), hi = b.getDouble(1)))
+    val m = scheme match {
+      case RangePartition(c, _) if recorded.bounds._1 == recorded.bounds._2 =>
+        rangeBounds(df, c).filter(b => b._1 != b._2).fold(recorded) { b =>
+          val healed = recorded.copy(bounds = b)
           writeSidecar(path, healed)
           healed
-        } else m
-      case m => m
+        }
+      case _ => recorded
     }
     // CSV is positional: every leaf file must carry exactly the sidecar's
     // column layout (one global schema parses all files), so a batch is
     // reordered to that layout and schema evolution is refused loudly — it
     // is a self-describing-format (parquet/orc) feature, not a CSV one.
     val aligned =
-      if (format != "csv") df
-      else meta.map(_.schema).filter(_.nonEmpty).map { s =>
+      if (format != "csv" || m.schema.isEmpty) df
+      else {
+        val s = m.schema
         val extra = df.columns.filterNot(c =>
           s.fieldNames.contains(c) || c == BucketCol)
         require(extra.isEmpty,
@@ -302,18 +420,7 @@ class GraftCatalog(spark: SparkSession, root: String,
         require(missing.isEmpty,
           s"append: csv batch is missing columns ${missing.mkString(", ")}")
         df.select(s.fieldNames.map(col).toIndexedSeq: _*)
-      }.getOrElse(df)
-    // Reproduce the table's physical layout for the new rows — an appended
-    // batch written flat into a bucketed table would corrupt partition
-    // discovery (leaf files at the root next to bucket directories).
-    val (frame, partCol) = meta.map(_.scheme) match {
-      case Some(SidecarScheme("hash", c, _, _, _)) => (coerceNullKey(aligned, c), Some(c))
-      case Some(SidecarScheme("bucketed_hash", c, n, _, _)) =>
-        (aligned.withColumn(BucketCol, pmod(hash(col(c)), lit(n))), Some(BucketCol))
-      case Some(SidecarScheme("range", c, n, lo, hi)) =>
-        (aligned.withColumn(BucketCol, rangeBucket(c, lo, hi, n)), Some(BucketCol))
-      case _ => (aligned, None)
-    }
+      }
     // a so-far-clean csv table is re-checked against THIS batch only: once
     // any batch carries a newline the flag is sticky-true (old files are
     // never rescanned); a clean steady-state append pays one early-out scan.
@@ -321,9 +428,8 @@ class GraftCatalog(spark: SparkSession, root: String,
     // the two writes degrades to the safe multiLine=true read path — the
     // reverse order could leave a clean flag over newline-bearing files and
     // reads would then split records mid-row.
-    val nlUpgrade = format == "csv" && meta.exists(!_.embeddedNewlines) &&
-      hasEmbeddedNewlines(aligned)
-    if (nlUpgrade) meta.foreach(m => writeSidecar(path, m.copy(embeddedNewlines = true)))
+    val nlUpgrade = format == "csv" && !m.embeddedNewlines && hasEmbeddedNewlines(aligned)
+    if (nlUpgrade) writeSidecar(path, m.copy(embeddedNewlines = true))
     // No flag rollback on a thrown save: a commitJob that fails PARTWAY
     // through its sequential task-file promotion can leave some of the
     // batch's newline-bearing rows in the table, and a restored clean flag
@@ -331,119 +437,90 @@ class GraftCatalog(spark: SparkSession, root: String,
     // newline-bearing append therefore leaves the table conservatively
     // dirty (slower whole-file reads, never corrupt ones) — the same
     // degradation an actual crash produces.
-    // A tracked table's commit delta is exactly the files THIS write added:
-    // the post-write listing minus the pre-write one. Files already on disk
-    // but never committed (a dead writer's residue) stay out of the manifest
-    // and out of every partial, so vacuum still sees them as orphans.
-    val tracked = meta.exists(_.versions.nonEmpty)
-    val before = if (tracked) listLeaves(path) else Nil
-    val observed = Partials.observe(frame, partCol, tracked && servesPartials)
-    val w = observed.frame.write
-    capped(partCol.fold(w)(w.partitionBy(_))).mode("append").format(format).save(target)
+    val before = listLeaves(path)
+    val (frame, partCol) = layout(aligned, scheme, m.bounds)
+    val observed = save(frame, partCol, abs(path), "append")
     // Sidecar schema := recorded schema ∪ the BATCH's newly declared columns.
     // NOT the merged read schema: that re-types partition columns from
     // directory-name inference (BIGINT → INT), reorders them to the end, and
     // records the internal bucket column as if it were user data.
-    // Snapshot history: append only ADDS files, so this commit's delta is
-    // appended and older deltas stay valid untouched. An untracked legacy
-    // table (versions empty) stays untracked — starting history mid-life
-    // would fabricate a v1 that never existed.
-    meta.foreach { m =>
-      val newFields = df.schema.fields.filterNot(f =>
-        f.name == BucketCol || m.schema.fieldNames.contains(f.name))
-      val added = if (tracked) listLeaves(path).filterNot(before.toSet) else Nil
-      writeSidecar(path, m.copy(
-        schema = StructType(m.schema.fields ++ newFields),
-        embeddedNewlines = m.embeddedNewlines || nlUpgrade,
-        versions = if (tracked) m.versions :+ added.map(_._1) else Nil,
-        partials = if (tracked) appendPartials(m.partials, observed.collect(),
-          byDir(before).keySet, byDir(added)) else Map.empty))
-    }
-  }
-
-  /** Partials after an append: a directory the batch wrote into combines its
-    * old partial with the batch's (rows and files both add); a directory new
-    * to the table takes the batch's. A written directory that existed
-    * without a partial, or whose batch partial is missing, gets none.
-    * Untouched directories keep theirs. */
-  private def appendPartials(old: Map[String, DirPartial],
-    batch: Option[Map[String, DirPartial]], existed: Set[String],
-    added: Map[String, Map[String, Long]]): Map[String, DirPartial] = {
-    val touched = added.keySet ++ batch.fold(Set.empty[String])(_.filter(_._2.rows > 0).keySet)
-    old.filterNot(e => touched(e._1)) ++ touched.flatMap { d =>
-      for {
-        b <- batch.flatMap(_.get(d))
-        files <- added.get(d)
-        fresh = b.copy(files = files)
-        p <- if (existed(d)) old.get(d).map(_ + fresh) else Some(fresh)
-      } yield d -> p
-    }
+    val newFields = df.schema.fields.filterNot(f =>
+      f.name == BucketCol || m.schema.fieldNames.contains(f.name))
+    commit(path, m.copy(schema = StructType(m.schema.fields ++ newFields),
+      embeddedNewlines = m.embeddedNewlines || nlUpgrade), Appended(before), observed)
   }
 
   /** merge — upsert a batch by key (Delta/Iceberg MERGE semantics: matched
     * keys are replaced by the batch row, unmatched batch rows insert). The
     * property that matters at 100 TB: only partitions the batch TOUCHES are
     * read, merged and rewritten — a 1%-of-partitions batch costs 1% of the
-    * table, not a full rewrite. Protocol per touched partition mirrors
-    * compact's park-and-swap (no point loses both copies). The touched-value
-    * list is driver-side metadata (bounded by partition count, like every
-    * partition listing here). A physical rewrite ⇒ snapshot history
-    * truncates, same policy as compact/rm. Hash-partitioned tables only —
-    * range/bucketed layouts route through their bucket column the same way,
-    * but the query surface only needs the reference's hash scheme. */
-  def merge(batch: DataFrame, path: String, key: String): Unit = {
-    require(isTable(path), s"merge target $path is not a committed table")
-    requireCoherentScheme(path, "merge")
-    val meta = readMeta(path).getOrElse(sys.error(s"merge: no sidecar at $path"))
-    require(meta.scheme.kind == "hash",
-      s"merge: only hash-partitioned tables are supported, got ${meta.scheme.kind}")
-    val c = meta.scheme.column
-    require(batch.columns.sorted.sameElements(meta.schema.fieldNames.sorted),
+    * table, not a full rewrite. The touched directories are staged, then
+    * park-and-swapped in ([[swapIn]]). The touched-value list is driver-side
+    * metadata (bounded by partition count, like every partition listing
+    * here). A physical rewrite ⇒ snapshot history truncates, same policy as
+    * compact/rm. Hash-partitioned tables only — range/bucketed layouts route
+    * through their bucket column the same way, but the query surface only
+    * needs the reference's hash scheme. */
+  def merge(batch: DataFrame, path: String, key: String): Unit = exclusive(path) {
+    val (m, scheme) = writable(path, "merge")
+    val c = scheme match {
+      case HashPartition(c) => c
+      case other => throw new IllegalArgumentException(
+        s"merge: only hash-partitioned tables are supported, got $other")
+    }
+    require(batch.columns.sorted.sameElements(m.schema.fieldNames.sorted),
       s"merge: batch schema ${batch.columns.sorted.mkString(",")} must equal " +
-        s"the table's ${meta.schema.fieldNames.sorted.mkString(",")}")
+        s"the table's ${m.schema.fieldNames.sorted.mkString(",")}")
     // cast to the sidecar's DECLARED types: a wider-typed batch (e.g. LONG
     // keys into an INT table) would otherwise widen the union and write
     // files the recorded schema can no longer read
-    val aligned = coerceNullKey(
-      batch.select(meta.schema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*), c)
+    val (aligned, _) = layout(batch.select(m.schema.fields.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*), scheme, m.bounds)
     val touched = aligned.select(col(c)).distinct().collect().map(_.get(0))
     // partition-pruned read of ONLY the touched directories; batch rows win
     // on key collision (left_anti drops the old versions)
-    val current = loadTable(path).filter(col(c).isInCollection(touched))
-    val merged = current
+    val merged = loadData(path, Some(m)).filter(col(c).isInCollection(touched))
       .join(aligned.select(col(key).as(key)), Seq(key), "left_anti")
       .unionByName(aligned)
     val base = abs(path)
-    val tmp = new Path(base.getParent, base.getName + "__merging")
-    fs.delete(tmp, true)
-    val observed = Partials.observe(merged.repartition(col(c)), Some(c), servesPartials)
-    capped(observed.frame.write.partitionBy(c))
-      .mode("overwrite").format(format).save(tmp.toString)
-    val oldRoot = new Path(base.getParent, base.getName + "__old")
-    fs.delete(oldRoot, true)
-    fs.mkdirs(oldRoot)
-    val swapped = fs.listStatus(tmp)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-    swapped.foreach { d =>
-      val name = d.getPath.getName
-      val dest = new Path(base, name)
-      // park-and-swap; a touched value new to the table has nothing to park
-      if (fs.exists(dest))
-        require(fs.rename(dest, new Path(oldRoot, name)),
-          s"merge: park $name failed")
-      require(fs.rename(d.getPath, dest), s"merge: swap $name failed")
+    val observed = save(ordered(merged, c), Some(c), new Path(swapRoot(base), "staged"), "overwrite")
+    // a touched value new to the table has nothing to park
+    commit(path, m, Rewrote(swapIn(base)), observed)
+  }
+
+  /** compact — rewrite the table so every partition directory holds exactly
+    * one file. Many small files per partition are the steady state of
+    * incremental ingest (every micro-batch/put appends its own); at 100 TB the
+    * namenode/list overhead and per-file open cost dominate reads long before
+    * data volume does, so periodic compaction is a first-class catalog op.
+    * Compaction cost scales with FRAGMENTATION, not table size: only
+    * directories holding 2+ data files are read, rewritten and swapped;
+    * already-compact partitions (the vast majority of a daily run at 100 TB)
+    * are untouched. A leaf-capped table cannot distinguish "minimal
+    * ceil(rows/cap) files" from fragmentation without row counts, so its
+    * multi-file dirs are rewritten each run — the cap bounds that work. The
+    * rewrite is staged, then park-and-swapped in ([[swapIn]]). It records
+    * the partials it observed for every directory it rewrites (the rows of
+    * any residue there are folded in), so a table written before partials
+    * gains them. */
+  def compact(path: String): Unit = exclusive(path) {
+    val (m, scheme) = writable(path, "compact")
+    val base = abs(path)
+    val partCol = partitionColumn(scheme)
+    // a partitioned table's directories, or an unpartitioned one's root ("")
+    val frag = byDir(listLeaves(path)).filter { case (d, files) =>
+      files.size > 1 && d.nonEmpty == partCol.isDefined
     }
-    fs.delete(oldRoot, true)
-    fs.delete(tmp, true)
-    // each swapped directory holds exactly the observed rows; the untouched
-    // ones keep their partials
-    if (meta.versions.nonEmpty) {
-      val leaves = listLeaves(path)
-      val names = swapped.map(_.getPath.getName).toSet
-      writeSidecar(path, meta.copy(versions = Seq(leaves.map(_._1)),
-        partials = meta.partials.filterNot(e => names(e._1)) ++
-          withFiles(observed.collect(), byDir(leaves).filter(e => names(e._1)))))
+    if (frag.nonEmpty) { // else nothing fragmented: a metadata-only no-op
+      val staged = new Path(swapRoot(base), "staged")
+      val observed = partCol match {
+        case Some(c) =>
+          save(ordered(loadData(path, Some(m), Some(frag.keys.toSeq.map(new Path(base, _)))), c),
+            Some(c), staged, "overwrite")
+        case None => save(loadData(path, Some(m)).coalesce(1), None, staged, "overwrite")
+      }
+      swapIn(base, frag.get("").toSeq.flatMap(_.keys))
+      commit(path, m, Rewrote(frag.keySet), observed)
     }
   }
 
@@ -463,16 +540,15 @@ class GraftCatalog(spark: SparkSession, root: String,
   /** vacuum — delete everything in and around the table that no snapshot
     * references: leaf files absent from the manifest union (residue of a
     * write that died after task commit but before its delta was recorded),
-    * partition directories left empty by those deletes, and the parked
-    * sibling roots a crashed compact/merge leaves behind (`<name>__old`,
-    * `__compacting`, `__merging` — their swap protocols delete them on
-    * success, so their existence IS the crash marker). Returns the number of
-    * paths removed.
+    * partition directories left empty by those deletes, and the swap root a
+    * crashed compact/merge leaves behind ([[swapRoot]] — a finished swap
+    * deletes it, so its existence IS the crash marker). Returns the number
+    * of paths removed.
     *
-    * Safety model: single writer (the catalog's standing assumption — every
-    * swap protocol here parks-and-renames rather than locking). An in-flight
-    * Spark write stages under `_temporary`, which the `_`-prefix rule already
-    * excludes from listing, so vacuum cannot eat a running job's output.
+    * Safety model: one writer per table at a time — writes in this JVM
+    * serialize on the table's lock, which vacuum takes too; writers in other
+    * JVMs are not coordinated. An in-flight Spark write stages under
+    * `_temporary`, which the `_`-prefix rule already excludes from listing.
     * Time-based retention (Delta's RETAIN n HOURS) exists to protect
     * concurrent READERS of just-rewritten files; manifest-driven reads here
     * pin exact file lists at plan time, so the window is the plan-to-scan gap
@@ -481,7 +557,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * is metadata-class work, proportional to residue, never to table size.
     * Works on replicated tables too: the shared manifest is resolved under
     * each replica root. */
-  def vacuum(path: String): Long = {
+  def vacuum(path: String): Long = exclusive(path) {
     val m = readMeta(path).getOrElse(sys.error(s"vacuum: no sidecar at $path"))
     require(m.versions.nonEmpty,
       s"vacuum: $path has no snapshot history — untracked tables have no " +
@@ -511,11 +587,7 @@ class GraftCatalog(spark: SparkSession, root: String,
       else false
     }
     sweepEmpty(base)
-    // crashed-swap residue parks OUTSIDE the table root
-    Seq("__old", "__compacting", "__merging").foreach { suffix =>
-      val parked = new Path(base.getParent, base.getName + suffix)
-      if (fs.exists(parked) && fs.delete(parked, true)) removed += 1
-    }
+    if (fs.exists(swapRoot(base)) && fs.delete(swapRoot(base), true)) removed += 1
     removed
   }
 
@@ -526,7 +598,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * deletes none); what it bounds is manifest count, the thing that
     * otherwise grows one delta per commit forever. readVersion(i) afterwards
     * addresses the i-th SURVIVING snapshot, oldest first. */
-  def expireSnapshots(path: String, keepLast: Int): Unit = {
+  def expireSnapshots(path: String, keepLast: Int): Unit = exclusive(path) {
     require(keepLast >= 1, s"expireSnapshots: keepLast must be >= 1, got $keepLast")
     val m = readMeta(path).getOrElse(sys.error(s"expireSnapshots: no sidecar at $path"))
     require(m.versions.nonEmpty, s"expireSnapshots: $path has no snapshot history")
@@ -541,7 +613,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * mid-protocol: an orphan data file inside a live partition (task output
     * promoted but its delta never recorded — directory-discovery reads would
     * double-count it), an entire uncommitted partition directory, and a
-    * parked `__old` root from a crashed compact/merge swap. Exactly the
+    * parked entry in the swap root of a crashed compact/merge. Exactly the
     * states [[vacuum]] exists to clean. */
   def plantCrashResidue(path: String): Unit = {
     val base = abs(path)
@@ -558,14 +630,11 @@ class GraftCatalog(spark: SparkSession, root: String,
       org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
         new Path(strayDir, "part-00000.snappy.parquet"), false, true, fs.getConf)
     }
-    val parked = new Path(base.getParent, base.getName + "__old")
     org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
-      new Path(parked, "leftover.parquet"), false, true, fs.getConf)
+      new Path(swapRoot(base), "parked/leftover.parquet"), false, true, fs.getConf)
   }
 
   // ----- A21: 2× replication with per-file failover reads -----
-
-  private val ReplicaDirs = Seq("replica-1", "replica-2")
 
   /** putReplicated — ingest with the reference's 2× replication
     * (init.sql:27-30: every block records a replica1 and replica2 location;
@@ -578,14 +647,15 @@ class GraftCatalog(spark: SparkSession, root: String,
     * sidecar records the shared replica-relative manifest; on a real cluster
     * the two subtrees would map to different failure domains the way the
     * reference spreads replicas across datanodes. */
-  def putReplicated(df: DataFrame, path: String, scheme: PartitionScheme): Unit = {
+  def putReplicated(df: DataFrame, path: String, scheme: PartitionScheme): Unit = exclusive(path) {
     val r1 = s"$path/${ReplicaDirs(0)}"
     val r2 = s"$path/${ReplicaDirs(1)}"
     put(df, r1, scheme)
     // clear any stale second replica BEFORE cloning: manifest-driven reads
     // would never touch leftovers, but dead bytes are storage leaks
     fs.delete(abs(r2), true)
-    val files = listLeafFiles(r1)
+    val m = readMeta(r1).getOrElse(sys.error(s"putReplicated: no sidecar at $r1"))
+    val files = m.versions.flatten
     val srcRoot = abs(r1).toString
     val dstRoot = abs(r2).toString
     // one copy task per leaf file, executor-side streams, nothing routes
@@ -608,21 +678,43 @@ class GraftCatalog(spark: SparkSession, root: String,
           src.getFileSystem(conf), src, dst.getFileSystem(conf), dst,
           false, true, conf)
       }
-    val m = readMeta(r1).getOrElse(sys.error(s"putReplicated: no sidecar at $r1"))
-    // the partials stay with replica-1's own sidecar; the replicated root is
-    // read through catReplicated's union and never served from partials
-    writeSidecar(path, m.copy(replication = 2, versions = Seq(files), partials = Map.empty))
+    // the manifest is replica-1's own, from its commit; the partials stay
+    // with replica-1's sidecar, as the replicated root is read through
+    // catReplicated's union and never served from partials
+    writeSidecar(path, m.copy(replication = 2, partials = Map.empty))
+  }
+
+  /** The files of `rels` (relative to `root`) that exist, by ONE listStatus
+    * per parent directory diffed against the names — O(#dirs) driver RPCs,
+    * the same listing a file index pays, where a per-file exists() was
+    * O(#files) serial round-trips (minutes of driver stalling at
+    * object-store latency once a table holds 10⁶-10⁷ files). */
+  private def survivors(root: Path, rels: Seq[String]): Set[String] =
+    rels.map(dirOf).distinct.iterator.flatMap { d =>
+      val dir = if (d.isEmpty) root else new Path(root, d)
+      val listed =
+        try fs.listStatus(dir).toSeq
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+      listed.filter(_.isFile).map(st =>
+        if (d.isEmpty) st.getPath.getName else s"$d/${st.getPath.getName}")
+    }.toSet
+
+  /** Each manifest file of a replicated table with the replica that serves
+    * it: 1 when it survives in replica-1, else 2 when it survives in
+    * replica-2, else 0 (lost from both). */
+  private def servingReplica(path: String, m: Sidecar): Seq[(String, Int)] = {
+    val manifest = m.versions.flatten
+    val roots = ReplicaDirs.map(d => new Path(abs(path), d))
+    val r1 = survivors(roots(0), manifest)
+    val r2 = survivors(roots(1), manifest.filterNot(r1))
+    manifest.map(rel => rel -> (if (r1(rel)) 1 else if (r2(rel)) 2 else 0))
   }
 
   /** catReplicated — read a replicated table with per-file failover: the
     * manifest resolves each file to replica-1 when it survives, replica-2
     * otherwise — `IFNULL(replica1, replica2)` (combined_flask.py:284,:522)
-    * lifted from a per-block SQL coalesce to manifest resolution. Survival
-    * is checked with ONE listStatus per partition directory diffed against
-    * the manifest — O(#dirs) driver RPCs, the same listing a file index
-    * pays, where a per-file exists() was O(#files) serial round-trips
-    * (minutes of driver stalling at object-store latency once a table holds
-    * 10⁶-10⁷ files). Data files are scanned exactly once, each replica
+    * lifted from a per-block SQL coalesce to manifest resolution
+    * ([[servingReplica]]). Data files are scanned exactly once, each replica
     * subset under its own basePath so partition discovery and pruning
     * behave exactly as on an unreplicated read, then unioned — scan ∪ scan,
     * no shuffle. Files lost from BOTH replicas fail loudly with names (the
@@ -631,26 +723,13 @@ class GraftCatalog(spark: SparkSession, root: String,
     val m = readMeta(path).getOrElse(sys.error(s"catReplicated: no sidecar at $path"))
     require(m.replication > 1,
       s"catReplicated: $path is not a replicated table (replication=${m.replication})")
-    val manifest = m.versions.flatten
-    val roots = ReplicaDirs.map(d => new Path(abs(path), d))
-    // manifest-relative parent dir ("" = table root) → one listing each
-    def survivors(root: Path, rels: Seq[String]): Set[String] =
-      rels.map(dirOf).distinct.iterator.flatMap { d =>
-        val dir = if (d.isEmpty) root else new Path(root, d)
-        val listed =
-          try fs.listStatus(dir).toSeq
-          catch { case _: java.io.FileNotFoundException => Seq.empty }
-        listed.filter(_.isFile).map(st =>
-          if (d.isEmpty) st.getPath.getName else s"$d/${st.getPath.getName}")
-      }.toSet
-    val r1 = survivors(roots(0), manifest)
-    val (fromR1, rest) = manifest.partition(r1.contains)
-    val fromR2 = rest.filter(survivors(roots(1), rest).contains)
-    val lost = rest.filterNot(fromR2.contains)
+    val served = servingReplica(path, m)
+    val lost = served.collect { case (rel, 0) => rel }
     require(lost.isEmpty,
       s"catReplicated: ${lost.size} file(s) of $path lost from BOTH replicas " +
         s"(e.g. ${lost.head}) — data loss, refusing to return a partial table")
-    Seq((roots(0), fromR1), (roots(1), fromR2))
+    ReplicaDirs.indices
+      .map(i => new Path(abs(path), ReplicaDirs(i)) -> served.collect { case (rel, r) if r == i + 1 => rel })
       .filter(_._2.nonEmpty)
       .map { case (root, rels) =>
         scanReplica(root, rels.map(new Path(root, _)), m) }
@@ -674,14 +753,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * 0 = lost from both. Driver-side metadata only. */
   def replicaStatus(path: String): DataFrame = {
     val m = readMeta(path).getOrElse(sys.error(s"replicaStatus: no sidecar at $path"))
-    val roots = ReplicaDirs.map(d => new Path(abs(path), d))
-    val rows = m.versions.flatten.map { rel =>
-      val served =
-        if (fs.exists(new Path(roots(0), rel))) 1
-        else if (fs.exists(new Path(roots(1), rel))) 2
-        else 0
-      Row(rel, served)
-    }
+    val rows = servingReplica(path, m).map { case (rel, r) => Row(rel, r) }
     val schema = StructType(Seq(
       StructField("file", StringType), StructField("served_by", IntegerType)))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
@@ -694,39 +766,6 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(replica >= 1 && replica <= ReplicaDirs.length, s"no replica $replica")
     fs.delete(new Path(new Path(abs(path), ReplicaDirs(replica - 1)), dirName), true)
   }
-
-  /** The sidecar's scheme descriptor. */
-  private case class SidecarScheme(kind: String, column: String, buckets: Int,
-    lo: Double, hi: Double)
-
-  /** The full sidecar record — the namenode-metadata analog.
-    * `embeddedNewlines` is csv-only splittability metadata: false means no
-    * string value in any written batch contained a newline, so reads may use
-    * `multiLine=false` and every leaf file SPLITS into parallel tasks. True
-    * (also the default when the sidecar predates the flag) forces the safe
-    * unsplittable whole-file parse.
-    * `versions` is the snapshot history (A19): one DELTA manifest of
-    * relative leaf-file paths per committed write — the files that commit
-    * ADDED; snapshot v is the union of deltas 1..v. Deltas keep the sidecar
-    * linear in total files (a cumulative-per-commit encoding would retain
-    * O(commits x files) — the growth curve incremental manifest designs like
-    * Iceberg's exist to avoid). Append-only writes make old deltas
-    * permanently valid; compact and rm-inside-a-table are physical
-    * deletes, so they truncate history to the single current snapshot. Nil =
-    * an untracked legacy table: time travel refuses rather than guessing
-    * v1.
-    * `replication` > 1 marks a table written by [[putReplicated]]: the data
-    * lives under `replica-1/` and `replica-2/` subtrees and `versions` holds
-    * the REPLICA-RELATIVE manifest both copies share.
-    * `partials` holds, per partition directory (table-relative, "" for an
-    * unpartitioned table), the write-time [[DirPartial]] of its committed
-    * files: every write that commits rows records them in the same sidecar
-    * commit, and `Pmr`'s stats are answered from them when the listing a
-    * read holds still matches. */
-  private case class Sidecar(schema: StructType, scheme: SidecarScheme,
-    permission: String, format: String, embeddedNewlines: Boolean = true,
-    versions: Seq[Seq[String]] = Nil, replication: Int = 1,
-    partials: Map[String, DirPartial] = Map.empty)
 
   /** Does any string column of the batch carry an embedded newline? One cheap
     * early-out scan (stops at the first hit) paid only on csv writes — the
@@ -743,115 +782,11 @@ class GraftCatalog(spark: SparkSession, root: String,
   /** Does a written table already exist (committed)? */
   def exists(path: String): Boolean = isTable(path)
 
-  private val MetaFile = "_graft.json"
-  private val MetaTmp = MetaFile + ".__new"
-
-  // Jackson (on Spark's classpath) — a real (de)serializer, not string
-  // surgery: a partition column literally named "scheme", or names with
-  // quotes/backslashes, must round-trip.
-  private def mapper = Partials.mapper
-
-  private def renderSidecar(m: Sidecar): String = {
-    val root = mapper.createObjectNode()
-    root.set[com.fasterxml.jackson.databind.JsonNode](
-      "schema", mapper.readTree(m.schema.json))
-    val sc = root.putObject("scheme")
-    sc.put("kind", m.scheme.kind)
-    sc.put("column", m.scheme.column)
-    sc.put("buckets", m.scheme.buckets)
-    if (m.scheme.kind == "range") {
-      sc.put("range_lo", m.scheme.lo)
-      sc.put("range_hi", m.scheme.hi)
-    }
-    root.put("permission", m.permission)
-    root.put("format", m.format)
-    if (m.format == "csv") root.put("embedded_newlines", m.embeddedNewlines)
-    if (m.partials.nonEmpty) Partials.renderDirs(root.putObject("partials"), m.partials)
-    if (m.versions.nonEmpty) {
-      val va = root.putArray("versions")
-      m.versions.foreach { files =>
-        val fa = va.addArray()
-        files.foreach(fa.add)
-      }
-    }
-    if (m.replication > 1) root.put("replication", m.replication)
-    root.toString
-  }
-
-  /** Sentinel kind for a sidecar whose scheme can't be recovered (malformed
-    * JSON, or the "scheme"/"kind" keys are missing). READ paths degrade
-    * gracefully on it; WRITE paths that would have to guess the physical
-    * layout (append, compact) refuse loudly instead — a defaulted scheme
-    * writing flat files into a partitioned table would corrupt partition
-    * discovery for the whole table. A genuine unpartitioned table records
-    * kind "none" explicitly and is unaffected. */
-  private val UnknownScheme = "unknown"
-
-  /** Kinds whose files live under `__graft_bucket=<n>` directories. */
-  private val BucketDirKinds = Set("bucketed_hash", "range")
-
-  private def parseSidecar(raw: String): Sidecar = {
-    // malformed JSON or missing keys degrade to defaults (scheme → the
-    // UnknownScheme sentinel) rather than throwing: a foreign, hand-edited,
-    // or pre-atomic-writer-truncated sidecar weakens describe()/cat(), and
-    // the layout-dependent writers check the sentinel and refuse
-    def optNode(node: Option[com.fasterxml.jackson.databind.JsonNode], f: String) =
-      node.flatMap(x => Option(x.get(f)))
-    val top = scala.util.Try(mapper.readTree(raw)).toOption.flatMap(Option(_))
-    val sc = optNode(top, "scheme")
-    Sidecar(
-      optNode(top, "schema")
-        .flatMap(s => scala.util.Try(
-          DataType.fromJson(s.toString).asInstanceOf[StructType]).toOption)
-        .getOrElse(new StructType()),
-      SidecarScheme(
-        optNode(sc, "kind").map(_.asText).getOrElse(UnknownScheme),
-        optNode(sc, "column").map(_.asText).getOrElse(""),
-        optNode(sc, "buckets").map(_.asInt).getOrElse(0),
-        optNode(sc, "range_lo").map(_.asDouble).getOrElse(0.0),
-        optNode(sc, "range_hi").map(_.asDouble).getOrElse(0.0)),
-      optNode(top, "permission").map(_.asText).getOrElse("644"),
-      optNode(top, "format").map(_.asText).getOrElse(format),
-      optNode(top, "embedded_newlines").map(_.asBoolean).getOrElse(true),
-      optNode(top, "versions").map { v =>
-        import scala.jdk.CollectionConverters._
-        v.elements().asScala.map(arr =>
-          arr.elements().asScala.map(_.asText).toSeq).toSeq
-      }.getOrElse(Nil),
-      optNode(top, "replication").map(_.asInt).getOrElse(1),
-      optNode(top, "partials").flatMap(Partials.parseDirs).getOrElse(Map.empty))
-  }
-
-  /** Refuse layout-dependent writes when the recorded scheme is incoherent —
-    * better a loud failure than silently guessing a layout and corrupting
-    * partition discovery. */
-  private def requireCoherentScheme(path: String, op: String): Unit =
-    readMeta(path).foreach { m =>
-      require(m.scheme.kind != UnknownScheme,
-        s"$op: sidecar at $path has no recoverable scheme — refusing to guess the layout")
-      require(!(BucketDirKinds(m.scheme.kind) && m.scheme.buckets <= 0),
-        s"$op: sidecar at $path declares ${m.scheme.kind} with buckets=${m.scheme.buckets}")
-    }
-
-  private def toSidecar(schema: StructType, scheme: PartitionScheme,
-    rangeBounds: Option[(Double, Double)],
-    embeddedNewlines: Boolean): Sidecar = {
-    val (kind, column, buckets) = scheme match {
-      case Unpartitioned => ("none", "", 0)
-      case HashPartition(c) => ("hash", c, 0)
-      case BucketedHashPartition(c, n) => ("bucketed_hash", c, n)
-      case RangePartition(c, n) => ("range", c, n)
-    }
-    Sidecar(schema, SidecarScheme(kind, column, buckets,
-      rangeBounds.map(_._1).getOrElse(0.0), rangeBounds.map(_._2).getOrElse(0.0)),
-      "644", format, embeddedNewlines)
-  }
-
   /** Atomic sidecar update: write the full new content to a temp name, then
-    * delete + rename into place (mirrors compact()'s swap discipline). A crash
-    * mid-write can never leave a TRUNCATED `_graft.json`: either the old file
-    * is still whole, or it is gone and the complete `.__new` survives —
-    * readMetaRaw falls back to it. */
+    * delete + rename into place. A crash mid-write can never leave a
+    * TRUNCATED `_graft.json`: either the old file is still whole, or it is
+    * gone and the complete `.__new` survives — readMetaRaw falls back to
+    * it. */
   private def writeSidecar(path: String, m: Sidecar): Unit = {
     val dir = abs(path)
     fs.mkdirs(dir)
@@ -864,14 +799,13 @@ class GraftCatalog(spark: SparkSession, root: String,
   }
 
   private def readMeta(path: String): Option[Sidecar] =
-    readMetaRaw(path).map(parseSidecar)
+    readMetaRaw(path).map(parseSidecar(_, format))
 
   /** describe — the table's catalog metadata as (key, value) rows: the ls -l /
     * namenode-inode view of a table. */
   def describe(path: String): DataFrame = {
     val meta = readMeta(path)
-    val kind = meta.map(_.scheme.kind).getOrElse("?")
-    val column = meta.map(_.scheme.column).getOrElse("")
+    val (kind, column, _) = meta.map(m => schemeFields(m.scheme)).getOrElse(("?", "", 0))
     val rows = Seq(
       Row("path", path), Row("scheme", kind), Row("partition_column", column),
       Row("committed", isTable(path).toString),
@@ -899,12 +833,14 @@ class GraftCatalog(spark: SparkSession, root: String,
     * DataFrame was put) falls back to the sidecar's recorded schema instead of
     * failing schema inference, so cat of an empty table is an empty DataFrame
     * with the right columns. */
-  private def loadTable(path: String): DataFrame = loadData(path, None)
+  private def loadTable(path: String): DataFrame = loadData(path, readMeta(path))
 
-  /** loadTable, optionally restricted to a subset of partition directories
-    * (basePath keeps partition-column discovery intact) — compact reads only
-    * the fragmented directories through this. */
-  private def loadData(path: String, subset: Option[Seq[Path]]): DataFrame = {
+  /** The data of the table at `path` whose sidecar is `meta`, optionally
+    * restricted to a subset of partition directories or files (basePath
+    * keeps partition-column discovery intact) — compact reads only the
+    * fragmented directories through this. */
+  private def loadData(path: String, meta: Option[Sidecar],
+    subset: Option[Seq[Path]] = None): DataFrame = {
     val targets: Seq[String] =
       subset.map(_.map(_.toString)).getOrElse(Seq(abs(path).toString))
     def withBase(r: org.apache.spark.sql.DataFrameReader) =
@@ -924,7 +860,6 @@ class GraftCatalog(spark: SparkSession, root: String,
         // newlines pays the unsplittable whole-file parse (then bounded by
         // the leaf-file cap — the reference's MAX_PARTITION_SIZE regime).
         // Known limitation: empty string and null are indistinguishable.
-        val meta = readMeta(path)
         val multiLine = meta.forall(_.embeddedNewlines)
         val reader = withBase(spark.read.option("header", "true")
           .option("multiLine", multiLine.toString))
@@ -940,20 +875,17 @@ class GraftCatalog(spark: SparkSession, root: String,
         // per query at 100 TB. Files predating an evolved column surface it as
         // nulls, same as the footer-merge read.
         val reader = withBase(spark.read.format(format))
-        readMeta(path).map(_.schema).filter(_.nonEmpty)
+        meta.map(_.schema).filter(_.nonEmpty)
           .fold(reader.option("mergeSchema", "true"))(reader.schema)
           .load(targets: _*)
       }
     } catch {
       case e: org.apache.spark.sql.AnalysisException
         if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sidecarSchema(path))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          meta.getOrElse(sys.error(s"no sidecar at $path")).schema)
     }
   }
-
-  /** The schema recorded in the `_graft.json` sidecar at put time. */
-  private def sidecarSchema(path: String): StructType =
-    readMeta(path).getOrElse(sys.error(s"no sidecar at $path")).schema
 
   /** cat — reassemble the full table. Partition discovery merges all partition
     * directories; original row order is the caller's to restore via a sort key
@@ -992,20 +924,20 @@ class GraftCatalog(spark: SparkSession, root: String,
       s"time travel: version $v out of range 1..${m.versions.length} at $path")
     // only a bucket-directory layout (or one the sidecar no longer names)
     // can hold such a manifest; hash and flat tables skip the listing
-    if (BucketDirKinds(m.scheme.kind) || m.scheme.kind == UnknownScheme)
+    if (m.scheme.forall(s => partitionColumn(s).contains(BucketCol)))
       requireBucketFilesListed("time travel", path, m.versions.flatten.toSet, listLeafFiles(path))
-    val files = m.versions.take(v).flatten.map(rel => new Path(abs(path), rel))
+    val rels = m.versions.take(v).flatten
     // loud, diagnosable failure over a runtime FileNotFound mid-scan: a
     // dangling manifest means some physical delete bypassed the truncation
     // hooks (a crash inside compact's swap window, or an out-of-catalog
-    // delete). One driver-side stat per manifest file — the same stats the
-    // scan's file index would pay anyway.
-    val missing = files.filterNot(fs.exists)
+    // delete). One listing per manifest directory ([[survivors]]).
+    val present = survivors(abs(path), rels)
+    val missing = rels.filterNot(present).map(new Path(abs(path), _))
     require(missing.isEmpty,
       s"time travel: snapshot $v of $path references ${missing.size} missing " +
         s"file(s) (e.g. ${missing.head}) — history was invalidated by a " +
         "physical delete outside put/append/compact/rm")
-    loadData(path, Some(files)).drop(BucketCol)
+    loadData(path, Some(m), Some(rels.map(new Path(abs(path), _)))).drop(BucketCol)
   }
 
   /** The raw sidecar text, if present. Falls back to the `.__new` temp file
@@ -1019,118 +951,6 @@ class GraftCatalog(spark: SparkSession, root: String,
         finally in.close()
       } catch { case _: java.io.FileNotFoundException => None }
     read(MetaFile).orElse(read(MetaTmp))
-  }
-
-  /** The physical partition column of a table, from its sidecar: the user's
-    * column for hash layout, the internal bucket column for bucketed/range,
-    * none for unpartitioned. */
-  private def physicalPartitionColumn(path: String): Option[String] =
-    readMeta(path).map(_.scheme).flatMap {
-      case SidecarScheme("hash", c, _, _, _) => Some(c)
-      case SidecarScheme("bucketed_hash" | "range", _, _, _, _) => Some(BucketCol)
-      case _ => None
-    }
-
-  /** compact — rewrite the table so every partition directory holds exactly
-    * one file. Many small files per partition are the steady state of
-    * incremental ingest (every micro-batch/put appends its own); at 100 TB the
-    * namenode/list overhead and per-file open cost dominate reads long before
-    * data volume does, so periodic compaction is a first-class catalog op.
-    * `repartition(partitionCol)` routes each value to exactly one task, so
-    * `partitionBy` emits exactly one file per directory. The rewrite lands
-    * complete (data + sidecar) in a temp dir, then swaps in via two renames
-    * with the old data parked at `<name>__old` until the new copy is in
-    * place — no point in the sequence loses both copies; a crash between the
-    * renames leaves the table briefly absent but fully recoverable from
-    * either directory. */
-  def compact(path: String): Unit = {
-    requireCoherentScheme(path, "compact")
-    val base = abs(path)
-    def dataFiles(p: Path) = fs.listStatus(p).filter(f => f.isFile &&
-      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-    def named(files: Seq[org.apache.hadoop.fs.FileStatus]) =
-      files.map(f => f.getPath.getName -> f.getLen).toMap
-    // directory → its data files before the rewrite
-    val rewritten: Map[String, Map[String, Long]] = physicalPartitionColumn(path) match {
-      case Some(c) =>
-        // Compaction cost scales with FRAGMENTATION, not table size: only
-        // directories holding 2+ data files are read, rewritten and swapped;
-        // already-compact partitions (the vast majority of a daily run at
-        // 100 TB) are untouched. A leaf-capped table cannot distinguish
-        // "minimal ceil(rows/cap) files" from fragmentation without row
-        // counts, so its multi-file dirs are rewritten each run — the cap
-        // bounds that work.
-        val frag = fs.listStatus(base).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .map(st => st -> dataFiles(st.getPath).toSeq)
-          .filter(_._2.length > 1)
-        if (frag.isEmpty) return // nothing fragmented: metadata-only no-op
-        val tmp = new Path(base.getParent, base.getName + "__compacting")
-        fs.delete(tmp, true)
-        // one task per partition value → one file per directory, unless the
-        // leaf-file cap splits an oversized value into ceil(rows/cap) files
-        capped(loadData(path, Some(frag.map(_._1.getPath)))
-            .repartition(col(c)).write.partitionBy(c))
-          .mode("overwrite").format(format).save(tmp.toString)
-        // swap per fragmented directory (park outside the table root — a
-        // parked name containing '=' INSIDE it would be rediscovered as a
-        // partition after a crash): no point loses both copies, the root and
-        // sidecar are never touched, and a crash strands at most one
-        // partition in the parked root, recoverable by rename.
-        val oldRoot = new Path(base.getParent, base.getName + "__old")
-        fs.delete(oldRoot, true)
-        fs.mkdirs(oldRoot)
-        frag.foreach { case (d, _) =>
-          val name = d.getPath.getName
-          val fresh = new Path(tmp, name)
-          require(fs.exists(fresh), s"compact: rewrite missing partition $name")
-          require(fs.rename(d.getPath, new Path(oldRoot, name)),
-            s"compact: park $name failed")
-          require(fs.rename(fresh, d.getPath), s"compact: swap $name failed")
-        }
-        fs.delete(oldRoot, true)
-        fs.delete(tmp, true)
-        frag.map { case (d, files) => d.getPath.getName -> named(files) }.toMap
-      case None =>
-        val files = dataFiles(base).toSeq
-        if (files.length <= 1) return // already a single file
-        val meta = readMetaRaw(path)
-        val tmp = new Path(base.getParent, base.getName + "__compacting")
-        fs.delete(tmp, true)
-        capped(loadTable(path).coalesce(1).write)
-          .mode("overwrite").format(format).save(tmp.toString)
-        // complete the replacement (sidecar included) BEFORE the original
-        meta.foreach { raw =>
-          val out = fs.create(new Path(tmp, MetaFile), true)
-          try out.write(raw.getBytes("UTF-8")) finally out.close()
-        }
-        val old = new Path(base.getParent, base.getName + "__old")
-        fs.delete(old, true)
-        require(fs.rename(base, old), s"compact: park $base -> $old failed")
-        require(fs.rename(tmp, base), s"compact: swap $tmp -> $base failed")
-        fs.delete(old, true)
-        Map("" -> named(files))
-    }
-    // compact REWRITES files, so every pre-compact manifest now names paths
-    // that no longer exist: truncate history to the single current snapshot
-    // (production lakehouses either rewrite old manifests or GC snapshots on
-    // rewrite — truncation is the honest minimal form). Tables that early-
-    // returned above changed nothing and keep their full history.
-    // A rewritten directory holds the same rows, so its partial stays and
-    // only its file list is refreshed — unless the directory held files its
-    // partial never covered (residue), whose rows are now folded in.
-    readMeta(path).filter(_.versions.nonEmpty).foreach { m =>
-      val leaves = listLeaves(path)
-      val now = byDir(leaves)
-      writeSidecar(path, m.copy(versions = Seq(leaves.map(_._1)),
-        partials = m.partials.flatMap { case (d, p) =>
-          rewritten.get(d) match {
-            case None => Some(d -> p)
-            case Some(pre) if pre == p.files => now.get(d).map(f => d -> p.copy(files = f))
-            case _ => None
-          }
-        }))
-    }
   }
 
   /** getPartitionLocations — the partition manifest: value directory, file
@@ -1161,6 +981,143 @@ object GraftCatalog {
     LogicalRelation}
   import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
   import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+
+  /** One lock object per qualified table root (see `exclusive`). */
+  private val WriteLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private val ReplicaDirs = Seq("replica-1", "replica-2")
+
+  private val MetaFile = "_graft.json"
+  private val MetaTmp = MetaFile + ".__new"
+
+  private val NoBounds = (0.0, 0.0)
+
+  /** Table-relative directory of a table-relative file ("" = the root). */
+  private def dirOf(rel: String): String = {
+    val i = rel.lastIndexOf('/')
+    if (i < 0) "" else rel.substring(0, i)
+  }
+
+  /** What a write did to the table's directories, for `commit`. */
+  private sealed trait Change
+  /** put: the table was written anew. */
+  private case object Replaced extends Change
+  /** merge, compact, rm: these directories were swapped for rewritten ones. */
+  private final case class Rewrote(dirs: Set[String]) extends Change
+  /** append: files were added to the table `before` listed. */
+  private final case class Appended(before: Seq[(String, Long)]) extends Change
+
+  /** The full sidecar record — the namenode-metadata analog.
+    * `scheme` is None when the sidecar names no recoverable scheme
+    * (malformed JSON, missing keys, an unknown kind, a bucketed/range scheme
+    * without buckets): read paths degrade gracefully on it, layout-dependent
+    * writes refuse. `bounds` are a range layout's persisted (lo, hi).
+    * `embeddedNewlines` is csv-only splittability metadata: false means no
+    * string value in any written batch contained a newline, so reads may use
+    * `multiLine=false` and every leaf file SPLITS into parallel tasks. True
+    * (also the default when the sidecar predates the flag) forces the safe
+    * unsplittable whole-file parse.
+    * `versions` is the snapshot history (A19): one DELTA manifest of
+    * relative leaf-file paths per committed write — the files that commit
+    * ADDED; snapshot v is the union of deltas 1..v. Deltas keep the sidecar
+    * linear in total files (a cumulative-per-commit encoding would retain
+    * O(commits x files) — the growth curve incremental manifest designs like
+    * Iceberg's exist to avoid). Append-only writes make old deltas
+    * permanently valid; merge, compact and rm-inside-a-table are physical
+    * deletes, so they truncate history to the single current snapshot. Nil =
+    * an untracked legacy table: time travel refuses rather than guessing
+    * v1.
+    * `replication` > 1 marks a table written by `putReplicated`: the data
+    * lives under `replica-1/` and `replica-2/` subtrees and `versions` holds
+    * the REPLICA-RELATIVE manifest both copies share.
+    * `partials` holds, per partition directory (table-relative, "" for an
+    * unpartitioned table), the write-time [[DirPartial]] of its committed
+    * files: every write records them in its commit, and `Pmr`'s stats are
+    * answered from them when the listing a read holds still matches. */
+  private[graft] final case class Sidecar(schema: StructType, scheme: Option[PartitionScheme],
+    bounds: (Double, Double), permission: String, format: String,
+    embeddedNewlines: Boolean = true, versions: Seq[Seq[String]] = Nil,
+    replication: Int = 1, partials: Map[String, DirPartial] = Map.empty)
+
+  /** A scheme's sidecar fields (kind, column, buckets); kind "unknown" for
+    * an unrecoverable one. */
+  private def schemeFields(s: Option[PartitionScheme]): (String, String, Int) = s match {
+    case None => ("unknown", "", 0)
+    case Some(Unpartitioned) => ("none", "", 0)
+    case Some(HashPartition(c)) => ("hash", c, 0)
+    case Some(BucketedHashPartition(c, n)) => ("bucketed_hash", c, n)
+    case Some(RangePartition(c, n)) => ("range", c, n)
+  }
+
+  // Jackson (on Spark's classpath) — a real (de)serializer, not string
+  // surgery: a partition column literally named "scheme", or names with
+  // quotes/backslashes, must round-trip.
+  private def mapper = Partials.mapper
+
+  private[graft] def renderSidecar(m: Sidecar): String = {
+    val root = mapper.createObjectNode()
+    root.set[com.fasterxml.jackson.databind.JsonNode](
+      "schema", mapper.readTree(m.schema.json))
+    val (kind, column, buckets) = schemeFields(m.scheme)
+    val sc = root.putObject("scheme")
+    sc.put("kind", kind)
+    sc.put("column", column)
+    sc.put("buckets", buckets)
+    if (m.scheme.exists(_.isInstanceOf[RangePartition])) {
+      sc.put("range_lo", m.bounds._1)
+      sc.put("range_hi", m.bounds._2)
+    }
+    root.put("permission", m.permission)
+    root.put("format", m.format)
+    if (m.format == "csv") root.put("embedded_newlines", m.embeddedNewlines)
+    if (m.partials.nonEmpty) Partials.renderDirs(root.putObject("partials"), m.partials)
+    if (m.versions.nonEmpty) {
+      val va = root.putArray("versions")
+      m.versions.foreach { files =>
+        val fa = va.addArray()
+        files.foreach(fa.add)
+      }
+    }
+    if (m.replication > 1) root.put("replication", m.replication)
+    root.toString
+  }
+
+  /** Inverse of [[renderSidecar]]. Malformed JSON or missing keys degrade
+    * to defaults (the scheme to None) rather than throwing: a foreign,
+    * hand-edited, or pre-atomic-writer-truncated sidecar weakens
+    * describe()/cat(), and the layout-dependent writers refuse. A genuine
+    * unpartitioned table records kind "none" explicitly. */
+  private[graft] def parseSidecar(raw: String, defaultFormat: String): Sidecar = {
+    def optNode(node: Option[com.fasterxml.jackson.databind.JsonNode], f: String) =
+      node.flatMap(x => Option(x.get(f)))
+    val top = scala.util.Try(mapper.readTree(raw)).toOption.flatMap(Option(_))
+    val sc = optNode(top, "scheme")
+    val column = optNode(sc, "column").map(_.asText).getOrElse("")
+    val buckets = optNode(sc, "buckets").map(_.asInt).getOrElse(0)
+    Sidecar(
+      optNode(top, "schema")
+        .flatMap(s => scala.util.Try(
+          DataType.fromJson(s.toString).asInstanceOf[StructType]).toOption)
+        .getOrElse(new StructType()),
+      optNode(sc, "kind").map(_.asText).collect {
+        case "none" => Unpartitioned
+        case "hash" if column.nonEmpty => HashPartition(column)
+        case "bucketed_hash" if column.nonEmpty && buckets > 0 => BucketedHashPartition(column, buckets)
+        case "range" if column.nonEmpty && buckets > 0 => RangePartition(column, buckets)
+      },
+      (optNode(sc, "range_lo").map(_.asDouble).getOrElse(0.0),
+        optNode(sc, "range_hi").map(_.asDouble).getOrElse(0.0)),
+      optNode(top, "permission").map(_.asText).getOrElse("644"),
+      optNode(top, "format").map(_.asText).getOrElse(defaultFormat),
+      optNode(top, "embedded_newlines").map(_.asBoolean).getOrElse(true),
+      optNode(top, "versions").map { v =>
+        import scala.jdk.CollectionConverters._
+        v.elements().asScala.map(arr =>
+          arr.elements().asScala.map(_.asText).toSeq).toSeq
+      }.getOrElse(Nil),
+      optNode(top, "replication").map(_.asInt).getOrElse(1),
+      optNode(top, "partials").flatMap(Partials.parseDirs).getOrElse(Map.empty))
+  }
 
   /** The partials of `column` over exactly the rows `df` yields, one per
     * directory its scan reads, or None. It needs: `df` is a plain
@@ -1211,7 +1168,7 @@ object GraftCatalog {
       // a one-file snapshot read is rooted at that file: no sidecar below it
       cat = new GraftCatalog(spark, root.toString, fmt)
       m <- scala.util.Try(cat.readMeta("")).toOption.flatten
-      if m.replication == 1 && m.format == fmt && m.scheme.kind != cat.UnknownScheme
+      if m.replication == 1 && m.format == fmt && m.scheme.isDefined
       served <- {
         val rootPath = root.toUri.getPath
         // the index drops zero-length files; they hold no rows
@@ -1228,7 +1185,7 @@ object GraftCatalog {
           if (dirty.isEmpty) Some(Map.empty[String, (Long, ColPartial)])
           else if (m.partials.isEmpty) None // written without partials: scanned
           else Partials.compute(
-            cat.loadData("", Some(dirty.toSeq.map(listed(_).head.getPath.getParent))),
+            cat.loadData("", Some(m), Some(dirty.toSeq.map(listed(_).head.getPath.getParent))),
             partCols.headOption, attr.name).map(_.dirs)
             // a directory name the aggregate does not reproduce is no proof
             .filter(_.keySet.subsetOf(dirty))

@@ -144,8 +144,8 @@ object Pmr {
   /** A22 — vacuum + snapshot expiration: the maintenance pass that keeps a
     * long-lived table healthy. The query ingests orders in two commits,
     * plants the residue of a crashed writer (an orphan file inside a live
-    * partition, a whole uncommitted partition directory, a parked `__old`
-    * root), vacuums, folds history to one snapshot, and reads back. The
+    * partition, a whole uncommitted partition directory, a parked entry in
+    * the swap root), vacuums, folds history to one snapshot, and reads back. The
     * oracle equality IS the proof vacuum removed exactly the residue:
     * directory-discovery reads would double-count the orphan rows if vacuum
     * missed them, and would lose live rows if it overreached. */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold-vs-warm cost of the memoized derived stores (the round-9 bench-
   * honesty directive): the per-round bench runs with signature tables,
   * trained codebooks and IVF layouts already warm, so the amortized number
@@ -19,9 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ColdWarm {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    val spark = graft.GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Unit = {

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.{GraftConf, SparkEntry}
@@ -24,13 +23,11 @@ object ExplainDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // plan evidence must be reproducible: the effective parallelism (which
     // shuffle-partition-dependent plan details ride on) goes into every dump
     // header below and to stdout here (r17 ADVICE — Bench defaults differ)
-    println(s"[explain-dump] effective SPARK_GRAFT_CPUS=$cpus")
-    val spark = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    println(s"[explain-dump] effective SPARK_GRAFT_CPUS=${GraftConf.localCpus}")
+    val spark = GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val unknown = names.filterNot(SparkEntry.queries.contains)
@@ -42,7 +39,7 @@ object ExplainDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.write.format("noop").mode("overwrite").save()
       val again = SparkEntry.queries(name)(spark, sfDir)
-      val txt = s"-- cpus=$cpus shufflePartitions=$cpus sfDir=$sfDir\n" +
+      val txt = s"-- cpus=${GraftConf.localCpus} shufflePartitions=${GraftConf.localCpus} sfDir=$sfDir\n" +
         again.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), txt)
       println(s"wrote $outDir/${name}_$suffix.txt (${txt.length} chars)")

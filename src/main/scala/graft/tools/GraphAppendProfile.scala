@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the C56/D21 ∝-affected evidence lines — wall-clock of the
@@ -17,10 +16,8 @@ import org.apache.spark.sql.functions._
 object GraphAppendProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = graft.GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    val spark = graft.GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.{GraphStore, Similarity}
     def noop(df: org.apache.spark.sql.DataFrame): Unit =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: the C52 graph-build cost SPLIT — Lloyd codebook training vs
   * assignment+layout write vs edge scoring, from genuine cold (r15 verdict
   * What's-wrong #2: the "linear build" claim must be replaced by the
@@ -14,9 +12,7 @@ import org.apache.spark.sql.SparkSession
 object GraphBuildProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    val spark = graft.GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one warm-up query so JVM/codegen startup doesn't land in stage 1
     // (embeddings-only, so the profile also runs on ANN-only scale dirs)

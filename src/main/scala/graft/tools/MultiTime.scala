@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{GraftConf, SparkEntry}
 
 /** Dev tool: time a comma-separated list of queries in ONE session (N warm
@@ -15,14 +13,13 @@ object MultiTime {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val overrides = args.drop(3).map { kv =>
       val parts = kv.split("=", 2)
       require(parts.length == 2 && parts(0).nonEmpty,
         s"override arg must be key=value, got: $kv")
       (parts(0), parts(1))
     }
-    val b = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
+    val b = GraftConf.local()
     overrides.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     // static (SparkConf-level) confs only apply through the builder above;

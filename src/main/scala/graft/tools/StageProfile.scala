@@ -3,7 +3,6 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.{GraftConf, SparkEntry}
 
@@ -18,7 +17,6 @@ object StageProfile {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // args 3+: key=value session-conf overrides for A/B experiments
     val overrides = args.drop(3).map { kv =>
       val parts = kv.split("=", 2)
@@ -26,7 +24,7 @@ object StageProfile {
         s"override arg must be key=value, got: $kv")
       (parts(0), parts(1))
     }
-    val b = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
+    val b = GraftConf.local()
     overrides.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     overrides.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.GraftConf
 
 /** Dev tool: run one streaming query and dump per-batch durationMs from the
@@ -11,9 +9,7 @@ object StreamProfile {
   def main(args: Array[String]): Unit = {
     val name = if (args.nonEmpty) args(0) else "stream_window"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftConf(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .getOrCreate()
+    val spark = GraftConf.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {

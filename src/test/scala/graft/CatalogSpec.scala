@@ -679,6 +679,90 @@ class CatalogSpec extends SparkSpec {
     Pmr.edfsPutHash(spark, sfDir)
   }
 
+  test("sidecars of every layout parse and render back byte for byte") {
+    for (name <- Seq("hash", "range", "bucketed", "flat", "csv", "replicated")) {
+      val in = getClass.getResourceAsStream(s"/sidecars/$name.json")
+      val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val parsed = GraftCatalog.parseSidecar(raw, "parquet")
+      assert(parsed.scheme.isDefined, name)
+      assert(GraftCatalog.renderSidecar(parsed) == raw, name)
+    }
+  }
+
+  test("compact records partials for every directory it rewrites, on a pre-partials table too") {
+    import graft.operators.Pmr
+    val cat = freshCatalog("compact_partials")
+    cat.put(Tables.load(spark, sfDir, "customer").repartition(4), "t", HashPartition("c_mktsegment"))
+    assert(cat.partitionLocations("t").collect().forall(_.getInt(1) > 1),
+      "fixture: every directory must hold 2+ files")
+    editSidecar("compact_partials/t")(_.remove("partials"))
+    assert(!served(Pmr.statAvg(cat.cat("t"), "c_acctbal")))
+    cat.compact("t")
+    val (got, jobs) = jobsDuring(Pmr.statAvg(cat.cat("t"), "c_acctbal").head())
+    assert(jobs == 0 && served(Pmr.statAvg(cat.cat("t"), "c_acctbal")), s"ran $jobs job(s)")
+    assert(bits(got) == bits(Pmr.scanStat(cat.cat("t"), "c_acctbal", Pmr.Avg, false).head()))
+  }
+
+  test("concurrent appends, merges and compacts on one table all commit") {
+    import graft.operators.Pmr
+    import spark.implicits._
+    val cat = freshCatalog("concurrent")
+    def batch(first: Long, n: Int) =
+      (first until first + n).map(k => (k, (k % 4).toInt, k * 0.25)).toDF("key", "k", "v")
+    cat.put(batch(0, 200), "t", HashPartition("k"))
+    // every batch holds keys no other batch has, so each one adds its rows
+    val (threads, opsPerThread, rows) = (3, 4, 50)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val done = (0 until threads).map { i =>
+      pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = (0 until opsPerThread).foreach { j =>
+          val b = batch(1000L * (1 + i * opsPerThread + j), rows)
+          (i + j) % 3 match {
+            case 0 => cat.append(b, "t")
+            case 1 => cat.merge(b, "t", "key")
+            case _ => cat.append(b, "t"); cat.compact("t")
+          }
+        }
+      })
+    }
+    try done.foreach(_.get()) finally pool.shutdown()
+    val want = 200L + threads * opsPerThread * rows
+    val keys = cat.cat("t").select("key").as[Long].collect()
+    assert(keys.length == want && keys.distinct.length == want, s"${keys.length} rows")
+    val stat = Pmr.statAvg(cat.cat("t"), "v")
+    assert(served(stat) && stat.head().getLong(1) == want)
+    assert(bits(stat.head()) == bits(Pmr.scanStat(cat.cat("t"), "v", Pmr.Avg, false).head()))
+    assert(cat.vacuum("t") == 0, "every file on disk is committed")
+    assert(cat.cat("t").count() == want)
+  }
+
+  test("replaying a put/append/merge/compact sequence writes the same bytes") {
+    import spark.implicits._
+    def run(name: String): Map[String, Seq[String]] = {
+      val cat = freshCatalog(name)
+      def batch(first: Long, n: Int, shift: Long = 0) = (first until first + n)
+        .map(k => (k + shift, (k % 3).toInt, (k * 37 % 101) * 0.5, s"s${k % 7}"))
+        .toDF("key", "k", "v", "s")
+      cat.put(batch(0, 300).repartition(3), "t", HashPartition("k"))
+      // two appends whose files have equal sizes, so their read order is
+      // the listing's
+      cat.append(batch(300, 60), "t")
+      cat.append(batch(300, 60, shift = 1L << 32), "t")
+      cat.merge(batch(0, 40).withColumn("v", col("v") + 1), "t", "key")
+      cat.compact("t")
+      val root = new java.io.File(s"${GraftConf.localRoot}/test_edfs/$name/t")
+      root.listFiles().filter(_.getName.startsWith("k=")).map { d =>
+        d.getName -> d.listFiles().filter(_.getName.startsWith("part-")).map { f =>
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(java.nio.file.Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+        }.toSeq.sorted
+      }.toMap
+    }
+    val first = run("replay_a")
+    assert(first.size == 3 && first.values.forall(_.size == 1), s"$first")
+    assert(run("replay_b") == first)
+  }
+
   /** Row values with doubles by their bits. */
   private def bits(r: org.apache.spark.sql.Row): Seq[Any] = r.toSeq.map {
     case d: Double => java.lang.Double.doubleToLongBits(d)
